@@ -12,6 +12,7 @@ driver's value-hash comparison is stable.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1174,7 +1175,6 @@ def q_verdict_counts_json(spark, sf_dir):
     plan = js.compile_schema(JSON_EVENTS_SCHEMA)
     # static pin: like-for-like with r2 (see q_validate_json_events)
     pred = plan.fail_predicate(doc_df, json_col="payload", json_types="static")
-    assert pred is not None
     return doc_df.agg(
         F.count(F.lit(1)).alias("rows"),
         F.sum(pred.cast("long")).alias("bad_rows"),
@@ -1541,13 +1541,12 @@ def q_events_user_sequence(spark, sf_dir):
 
 
 def q_verdict_counts_orders(spark, sf_dir):
-    """The predicate-only hot path (plans/predicate.py) under the
-    oracle: per-status row/bad-row counts from the compiled boolean,
-    no violation arrays."""
+    """The failure-predicate hot path (CompiledSchema.fail_predicate)
+    under the oracle: per-status row/bad-row counts from the compiled
+    boolean, no violation arrays."""
     orders = _t(spark, sf_dir, "orders")
     plan = js.compile_schema(ORDERS_SCHEMA)
     pred = plan.fail_predicate(orders)
-    assert pred is not None
     return (
         orders.groupBy("o_orderstatus")
         .agg(
@@ -2215,23 +2214,25 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_validate_orders(spark, "/root/testdata/sf0.001")
 
 
+ROTATION_ORDER_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "rotation_order.json"
+)
+
+
 def _rotate(qs: dict) -> dict:
     """Order the registry by rotation_order.json when present (written
     by tools/rotation.py from git diff + CORRECTNESS history): queries
     whose code changed since the last driver round lead, then the
     longest-unverified tail — the driver's oracle gate checks the
     first 50 entries, so the window must track the diff, not a manual
-    shuffle (r4 judge #2 / advice #2)."""
+    shuffle (r4 judge #2 / advice #2).  A missing file keeps the
+    registry order; a corrupt one raises."""
     import json as _json
-    import os as _os
 
-    path = _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)), "rotation_order.json"
-    )
     try:
-        with open(path) as f:
+        with open(ROTATION_ORDER_PATH) as f:
             order = _json.load(f)["order"]
-    except Exception:
+    except FileNotFoundError:
         return qs
     ranked = [q for q in order if q in qs] + [q for q in qs if q not in order]
     return {q: qs[q] for q in ranked}

@@ -350,8 +350,8 @@ def _validation_agg(spark: SparkSession, path: str):
 
     df = spark.read.parquet(path)
     plan = js.compile_schema(TRANSCRIPT_FULL_SCHEMA)
-    # predicate hot path (plans/predicate.py): verdict counting without
-    # violation-array construction
+    # failure-predicate hot path (CompiledSchema.fail_predicate):
+    # verdict counting without violation-array construction
     pred = plan.fail_predicate(df)
     return df.agg(
         F.count(F.lit(1)).alias("rows"),

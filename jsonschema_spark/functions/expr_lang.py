@@ -979,6 +979,10 @@ def _fn_set_expr(env, a, b=None, *rest):
             ),
             v.dtype,
         )
+    if isinstance(_v(env, a).dtype, (T.MapType, T.ArrayType)):
+        raise ExprError(
+            "2-arg set(counter, n) on a map/array value: use the 3-arg set(m, k, v)"
+        )
     return CVal(_v(env, b).num(), T.DoubleType())
 
 

@@ -210,56 +210,18 @@ class Uniqueness(Check):
     pre-aggregation for the degenerate case (per the north rule's
     "explicit skew-aware salting").
 
-    ``hash_first`` replaces the phase-1 payload with a SINGLE 64-bit
-    ``xxhash64(partition_id, *keys)`` per row and REJOINS colliding
-    hashes against the pruned scan for an exact per-key recount
-    (accidental ~2⁻⁶⁴ collisions regroup into count-1 rows and fall
-    out — exact, never probabilistic).  MEASURED (r5, 32.5M-row
-    transcript corpus, BENCH/profile_8to32_r5.json): this LOSES on
-    transcript-shaped keys — conv_id strings are short and lz4
-    compresses them ~3:1 in the shuffle while random 64-bit hashes
-    are incompressible, and the candidate rejoin adds a second scan +
-    exchange consumers; shuffle bytes came out ~3× HIGHER than the
-    full-key plan.  It stays available (off by default) for WIDE
-    composite keys (long URLs, text fingerprints) where the
-    hash-vs-key byte ratio genuinely inverts.  The structural answer
-    for the transcript workload is bucketed layout — a table bucketed
-    by conv_id runs this check with NO exchange at all (see
+    A hash-first variant (a 64-bit key hash shuffled instead of the
+    keys) was deleted because it shuffled ~3× more bytes on transcript
+    keys (BENCH/profile_8to32_r5.json).  The structural answer for the
+    transcript workload is bucketed layout — a table bucketed by
+    conv_id runs this check with NO exchange at all (see
     tools/profile_8to32.py uniqueness_bucketed).
     """
 
     keys: Sequence[str]
     partition_by: Sequence[str] | None = None
     salt_buckets: int = 0
-    hash_first: bool = False
     name: str = "uniqueness"
-
-    def _hashed(self, df: DataFrame) -> DataFrame:
-        """(partition_id, *keys, __h): pruned scan + 64-bit group hash
-        (computed map-side; NULL-vs-NULL key ambiguities only ever
-        CAUSE collisions, which phase 2 resolves exactly)."""
-        pid = _partition_id(self.partition_by).alias("partition_id")
-        proj = df.select(pid, *[F.col(k) for k in self.keys])
-        return proj.withColumn(
-            "__h",
-            F.xxhash64(F.col("partition_id"), *[F.col(k) for k in self.keys]),
-        )
-
-    def _exact_dup_counts(self, df: DataFrame) -> DataFrame:
-        """(partition_id, *keys, dup_count>1) via hash-first phases."""
-        hashed = self._hashed(df)
-        cand = (
-            hashed.groupBy("partition_id", "__h")
-            .agg(F.count(F.lit(1)).alias("__hc"))
-            .filter(F.col("__hc") > 1)
-            .select("__h")
-        )
-        return (
-            hashed.join(cand, "__h")
-            .groupBy("partition_id", *self.keys)
-            .agg(F.count(F.lit(1)).alias("dup_count"))
-            .filter(F.col("dup_count") > 1)
-        )
 
     def duplicates(self, df: DataFrame) -> DataFrame:
         """(partition_id, *keys, dup_count) for keys appearing >1 time."""
@@ -279,8 +241,6 @@ class Uniqueness(Check):
                 .agg(F.sum("__c").alias("dup_count"))
             )
             return counts.filter(F.col("dup_count") > 1)
-        if self.hash_first:
-            return self._exact_dup_counts(df)
         counts = (
             df.select(pid, *key_cols)
             .groupBy("partition_id", *self.keys)
@@ -288,55 +248,21 @@ class Uniqueness(Check):
         )
         return counts.filter(F.col("dup_count") > 1)
 
-    def _verdicts_hash_first(self, df: DataFrame) -> DataFrame:
-        # hash-first: the corpus-wide shuffle carries (partition_id,
-        # 8-byte hash, partial count); exact per-key recount only over
-        # colliding rows.  Partitions without duplicates come from the
-        # phase 1 aggregate (same exchange, reused) left-joined with
-        # the dup aggregate — never a second full-key shuffle.
-        hashed = self._hashed(df)
-        ph1 = hashed.groupBy("partition_id", "__h").agg(
-            F.count(F.lit(1)).alias("__hc")
-        )
-        cand = ph1.filter(F.col("__hc") > 1).select("__h")
-        exact = (
-            hashed.join(cand, "__h")
+    def verdicts(self, df: DataFrame) -> DataFrame:
+        # ONE scan: per-(partition, key) counts (the scan + first
+        # shuffle), then a per-partition re-aggregate of the tiny count
+        # rows.  Partitions without duplicates fall out naturally with
+        # dup_keys=0 — no second pass over the fact table.
+        pid = _partition_id(self.partition_by).alias("partition_id")
+        counts = (
+            df.select(pid, *[F.col(k) for k in self.keys])
             .groupBy("partition_id", *self.keys)
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        dups = exact.groupBy("partition_id").agg(
+        agg = counts.groupBy("partition_id").agg(
             F.sum((F.col("c") > 1).cast("long")).alias("dup_keys"),
             F.sum(F.when(F.col("c") > 1, F.col("c") - 1).otherwise(0)).alias("extra_rows"),
         )
-        pids = ph1.groupBy("partition_id").agg(F.count(F.lit(1)).alias("__nk"))
-        return (
-            pids.join(dups, "partition_id", "left")
-            .select(
-                "partition_id",
-                F.coalesce(F.col("dup_keys"), F.lit(0)).alias("dup_keys"),
-                F.coalesce(F.col("extra_rows"), F.lit(0)).alias("extra_rows"),
-            )
-        )
-
-    def verdicts(self, df: DataFrame) -> DataFrame:
-        if self.hash_first:
-            agg = self._verdicts_hash_first(df)
-        else:
-            # ONE scan: per-(partition, key) counts (the scan + first
-            # shuffle), then a per-partition re-aggregate of the tiny
-            # count rows.  Partitions without duplicates fall out
-            # naturally with dup_keys=0 — no second pass over the
-            # fact table.
-            pid = _partition_id(self.partition_by).alias("partition_id")
-            counts = (
-                df.select(pid, *[F.col(k) for k in self.keys])
-                .groupBy("partition_id", *self.keys)
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            agg = counts.groupBy("partition_id").agg(
-                F.sum((F.col("c") > 1).cast("long")).alias("dup_keys"),
-                F.sum(F.when(F.col("c") > 1, F.col("c") - 1).otherwise(0)).alias("extra_rows"),
-            )
         metrics = F.create_map(
             F.lit("dup_keys"), F.col("dup_keys").cast("string"),
             F.lit("extra_rows"), F.col("extra_rows").cast("string"),
@@ -724,59 +650,41 @@ class SchemaCheck(Check):
     json_types: str | None = None
 
     def _agg_exprs(self, df: DataFrame, p: str = ""):
-        # hot path: predicate-only compilation skips violation-array
-        # construction (~2.4x) — falls back to the array path when the
-        # document uses keywords outside the predicate subset.  The
-        # json_col predicate is a single Column in both parse modes
-        # (fused-suite compatible); variant mode prices the violations
-        # array in — standalone verdict counting should prefer
-        # plan.fail_verdicts (hoisted), but fusion with the other
-        # checks' single scan dominates that here.
+        # the plan's failure predicate: no violation arrays (~2.4x).
+        # The json_col predicate is a single Column in both parse modes
+        # (fused-suite compatible); standalone variant-mode verdict
+        # counting should prefer plan.fail_verdicts (hoisted), but
+        # fusion with the other checks' single scan dominates that here.
         pred = self.plan.fail_predicate(
             df, json_col=self.json_col, json_types=self.json_types
-        ) if self.json_col is not None else self.plan.fail_predicate(df)
-        if pred is not None:
-            return [
-                F.count(F.lit(1)).alias(f"{p}rows"),
-                F.sum(pred.cast("long")).alias(f"{p}bad_rows"),
-            ], False
-        viol_size = F.size(self.plan.violations_col(df))
+        )
         return [
             F.count(F.lit(1)).alias(f"{p}rows"),
-            F.sum((viol_size > 0).cast("long")).alias(f"{p}bad_rows"),
-            F.sum(viol_size).alias(f"{p}violation_total"),
-        ], True
+            F.sum(pred.cast("long")).alias(f"{p}bad_rows"),
+        ]
 
-    def _verdict_parts(self, p: str, with_total: bool) -> tuple[Column, Column]:
-        pairs = [
+    def _verdict_parts(self, p: str) -> tuple[Column, Column]:
+        return F.col(f"{p}bad_rows"), F.create_map(
             F.lit("rows"), F.col(f"{p}rows").cast("string"),
             F.lit("bad_rows"), F.col(f"{p}bad_rows").cast("string"),
-        ]
-        if with_total:
-            pairs += [
-                F.lit("violation_total"),
-                F.col(f"{p}violation_total").cast("string"),
-            ]
-        return F.col(f"{p}bad_rows"), F.create_map(*pairs)
+        )
 
     def verdicts(self, df: DataFrame) -> DataFrame:
-        aggs, with_total = self._agg_exprs(df)
         agg = df.groupBy(
             _partition_id(self.partition_by).alias("partition_id")
-        ).agg(*aggs)
-        fail, metrics = self._verdict_parts("", with_total)
+        ).agg(*self._agg_exprs(df))
+        fail, metrics = self._verdict_parts("")
         return agg.select(*_verdict_select(self.name, fail, metrics))
 
     def fused_aggs(self, df: DataFrame, prefix: str | None = None):
         """(agg exprs, verdict-struct builder) for single-pass fusion."""
         p = prefix or f"__{self.name}__"
-        aggs, with_total = self._agg_exprs(df, p)
 
         def build() -> Column:
-            fail, metrics = self._verdict_parts(p, with_total)
+            fail, metrics = self._verdict_parts(p)
             return _verdict_struct(self.name, fail, metrics)
 
-        return aggs, build
+        return self._agg_exprs(df, p), build
 
     def violations(self, df: DataFrame) -> DataFrame:
         keys = list(self.keys) if self.keys else [

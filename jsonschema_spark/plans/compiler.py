@@ -4,7 +4,9 @@ The Spark-native analog of the reference's compile step
 (``NewProp``, /root/reference/validator_core.go:304-363): a schema
 document (a plain python dict, same JSON shape the reference accepts)
 is compiled ONCE on the driver into a tree of ``Rule`` objects, each of
-which knows how to emit a typed violations Column for a ``ValueRef``.
+which knows how to emit a typed violations Column for a ``ValueRef`` —
+and, from the same definition, the boolean failure condition that
+verdict counting uses instead (``EmitRule``).
 Catalyst then optimizes the resulting expression DAG — whole-stage
 codegen, constant folding, predicate reordering come free.
 
@@ -28,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.errors import concat_violations, empty_violations
+from ..core.errors import concat_violations, empty_violations, viol_when
 from ..core.refs import ValueRef
 
 
@@ -38,10 +40,16 @@ class SchemaError(ValueError):
 
 
 class Rule:
-    """A compiled keyword: emits array<struct<path,info>> for a value."""
+    """A compiled keyword: emits array<struct<path,info>> for a value,
+    and the boolean ``fails`` — true exactly when that array is
+    non-empty.  The default derives ``fails`` from the array; keywords
+    written as an ``EmitRule`` build it without one."""
 
     def violations(self, ref: ValueRef) -> Column:  # pragma: no cover
         raise NotImplementedError
+
+    def fails(self, ref: ValueRef) -> Column:
+        return F.size(self.violations(ref)) > 0
 
 
 class FnRule(Rule):
@@ -50,6 +58,82 @@ class FnRule(Rule):
 
     def violations(self, ref: ValueRef) -> Column:
         return self.fn(ref)
+
+
+def any_true(conds: list[Column]) -> Column:
+    """OR of boolean Columns (False for none)."""
+    if not conds:
+        return F.lit(False)
+    out = conds[0]
+    for c in conds[1:]:
+        out = out | c
+    return out
+
+
+class _Violations:
+    """``EmitRule`` reading that builds the violations array."""
+
+    def of(self, rule: Rule, ref: ValueRef) -> Column:
+        return rule.violations(ref)
+
+    def none(self) -> Column:
+        return empty_violations()
+
+    def term(self, cond: Column, path, info) -> Column:
+        return viol_when(cond, path, info)
+
+    def join(self, parts: list[Column]) -> Column:
+        return concat_violations(*parts)
+
+    def each(self, arr: Column, fn) -> Column:
+        return F.flatten(F.transform(arr, fn))
+
+
+class _Fails:
+    """``EmitRule`` reading that builds the never-NULL failure
+    condition: a term fails when its cond is true (a NULL cond passes,
+    as in ``viol_when``), a join when any part fails."""
+
+    def of(self, rule: Rule, ref: ValueRef) -> Column:
+        return rule.fails(ref)
+
+    def none(self) -> Column:
+        return F.lit(False)
+
+    def term(self, cond: Column, path, info) -> Column:
+        return F.coalesce(cond, F.lit(False))
+
+    def join(self, parts: list[Column]) -> Column:
+        return any_true(parts)
+
+    def each(self, arr: Column, fn) -> Column:
+        return F.coalesce(F.exists(arr, fn), F.lit(False))
+
+
+VIOLATIONS = _Violations()
+FAILS = _Fails()
+
+
+class EmitRule(Rule):
+    """A keyword defined once, as ``emit(ref, out)``: it states its
+    ``(cond, path, info)`` terms (``out.term``), the sub-rules it runs
+    (``out.of``) and how they combine (``out.join``, ``out.each``,
+    ``out.none`` and ordinary ``F.when`` branches).  ``out=VIOLATIONS``
+    reads that as the violations array, ``out=FAILS`` as the failure
+    condition — two readings of one definition, so they cannot
+    disagree."""
+
+    def __init__(self, emit: Callable[[ValueRef, object], Column]):
+        self._emit = emit
+
+    def emit(self, ref: ValueRef, out) -> Column:
+        return self._emit(ref, out)
+
+    def violations(self, ref: ValueRef) -> Column:
+        return self.emit(ref, VIOLATIONS)
+
+    def fails(self, ref: ValueRef) -> Column:
+        return self.emit(ref, FAILS)
 
 
 class TransformOp:
@@ -148,7 +232,7 @@ class CompileCtx:
         return node
 
 
-class Node(Rule):
+class Node(EmitRule):
     """ArrProp analog: ordered (keyword, Rule) pairs for one schema
     object (validator_core.go:253-294)."""
 
@@ -156,13 +240,11 @@ class Node(Rule):
         self.rules = rules
         self.doc = doc
 
-    def violations(self, ref: ValueRef) -> Column:
-        if not self.rules:
-            return empty_violations()
-        return concat_violations(*[r.violations(ref) for _, r in self.rules])
+    def emit(self, ref: ValueRef, out) -> Column:
+        return out.join([out.of(r, ref) for _, r in self.rules])
 
     def ok(self, ref: ValueRef) -> Column:
-        return F.size(self.violations(ref)) == 0
+        return ~self.fails(ref)
 
 
 def compile_node(doc, path: str, ctx: CompileCtx) -> Node:
@@ -235,37 +317,25 @@ class CompiledSchema:
         df: DataFrame,
         json_col: str | None = None,
         json_types: str | None = None,
-    ) -> Column | None:
-        """Boolean ``row fails`` Column WITHOUT violation-array
-        construction — ~2.4x faster for verdict counting (the 10^12-row
-        hot path).  None when the document uses keywords outside the
-        predicate subset; callers fall back to ``annotate`` (equality
-        of the two paths is tested across the fixture schemas).
+    ) -> Column:
+        """Boolean ``row fails`` Column: the FAILS reading of every
+        rule (see ``EmitRule``), true exactly when the violations array
+        is non-empty, built without constructing that array — ~2.4x
+        faster for verdict counting (the 10^12-row hot path).  Rules
+        that define only their violations contribute
+        ``size(violations) > 0``.
 
         With ``json_col`` the predicate runs over the parsed JSON
         document column (same parse as annotate_json, fused into the
         same codegen projection); a malformed document counts as a
         failing row, matching the array path's single '$' violation."""
-        from .predicate import compile_fail_predicate
-
-        if not hasattr(self, "_pred_build"):
-            self._pred_build = compile_fail_predicate(self)
-        if self._pred_build is None:
-            return None
         if json_col is None:
-            return self._pred_build(df)
+            return self.node.fails(self.root_ref(df))
         mode = self._json_mode(json_types)
         parsed, malformed_of = self._json_parse_expr(json_col, mode)
-        if mode == "variant":
-            # the predicate compiler's static dispatch can't see runtime
-            # kinds; the faithful path prices the violations array in
-            # (the parse — the dominant cost — is identical)
-            root = ValueRef(col=parsed, dtype=T.VariantType(), path="$")
-            return (F.size(self.node.violations(root)) > 0) | malformed_of(parsed)
-        from .predicate import compile_fail
-
-        root = ValueRef(col=parsed, dtype=self.json_root_type(), path="$")
-        return compile_fail(self.doc, root, self.ctx) | malformed_of(parsed)
+        dt = T.VariantType() if mode == "variant" else self.json_root_type()
+        root = ValueRef(col=parsed, dtype=dt, path="$")
+        return self.node.fails(root) | malformed_of(parsed)
 
     def fail_verdicts(
         self,
@@ -278,13 +348,13 @@ class CompiledSchema:
         — the DataFrame form of ``fail_predicate`` for verdict
         counting.
 
-        For fixed columns and static JSON this delegates to the
-        predicate compiler (no violation-array construction).  For
-        variant-mode JSON it routes through ``annotate_json`` instead:
-        the single-Column contract of ``fail_predicate`` cannot carry
-        the hoisted-projection CSE, so the inline predicate re-evaluates
-        every variant primitive per keyword — measured ~1.8x slower
-        than hoisted-annotate + ``size() > 0`` at 1M docs."""
+        For fixed columns and static JSON this is ``fail_predicate``.
+        For variant-mode JSON it routes through ``annotate_json``
+        instead: the single-Column contract of ``fail_predicate`` cannot
+        carry the hoisted-projection CSE, so the inline predicate
+        re-evaluates every variant primitive per keyword — measured
+        ~1.8x slower than hoisted-annotate + ``size() > 0`` at 1M
+        docs."""
         if json_col is not None and self._json_mode(json_types) == "variant":
             tmp = "__jsonschema_viol__"
             ann = self.annotate_json(df, json_col, col=tmp, json_types=json_types)
@@ -297,11 +367,7 @@ class CompiledSchema:
                 F.count(F.lit(1)).alias("rows_validated"),
             )
         pred = self.fail_predicate(df, json_col=json_col, json_types=json_types)
-        if pred is not None:
-            return df.withColumn(col, pred)
-        tmp = "__jsonschema_viol__"
-        ann = self.annotate(df, col=tmp)
-        return ann.withColumn(col, F.size(tmp) > 0).drop(tmp)
+        return df.withColumn(col, pred)
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Apply mutation keywords (constVal/defaultVal/replaceKey/

@@ -20,23 +20,23 @@ from ..core.coerce import (
     number_of,
     string_of,
 )
-from ..core.errors import (
-    empty_violations,
-    go_num,
-    go_v,
-    viol_when,
-    violation,
-)
+from ..core.errors import go_num, go_v
 from ..core.refs import ValueRef, resolve
 from ..functions.values import parse_value
-from .compiler import FnRule, Rule, SchemaError, register_keyword
+from .compiler import EmitRule, Rule, SchemaError, register_keyword
 from .formats import compile_format
 
 
-def _skip_null(ref: ValueRef, v: Column) -> Column:
+def _skip_null(ref: ValueRef, out, v: Column) -> Column:
     if not ref.exists:
-        return empty_violations()
-    return F.when(ref.null(), empty_violations()).otherwise(v)
+        return out.none()
+    return F.when(ref.null(), out.none()).otherwise(v)
+
+
+def _check(ref: ValueRef, out, cond: Column, info) -> Column:
+    """A value assertion from its one ``(cond, info)`` pair: the
+    value fails when ``cond`` holds; a null or missing value passes."""
+    return _skip_null(ref, out, out.term(cond, ref.path, info))
 
 
 def _is_numeric(dt) -> bool:
@@ -77,12 +77,12 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
     wanted = [t.strip() for t in operand.split("|")]
     union = len(wanted) > 1
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         if "any" in wanted:
-            return empty_violations()
+            return out.none()
         dt = ref.dtype
         if isinstance(dt, T.VariantType):
-            return _type_variant(ref, wanted, union, operand)
+            return _type_variant(ref, out, wanted, union, operand)
         have = _type_names(dt) if dt is not None else set()
         checks: list[Column] = []
         for w in wanted:
@@ -104,12 +104,12 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
         else:
             given = dt.simpleString() if dt is not None else "null"
             info = F.lit(f"Invalid type, expected: {wanted[0]} , given: {given}")
-        return _skip_null(ref, viol_when(~ok, ref.path, info))
+        return _check(ref, out, ~ok, info)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
-def _type_variant(ref: ValueRef, wanted, union, operand) -> Column:
+def _type_variant(ref: ValueRef, out, wanted, union, operand) -> Column:
     """Runtime type dispatch on a Variant value — the exact typeOf
     switch (type.go:3-20) with reflect.TypeOf 'given:' labels
     (validator_base.go:44-160)."""
@@ -163,7 +163,7 @@ def _type_variant(ref: ValueRef, wanted, union, operand) -> Column:
             F.lit(f"Invalid type, expected: {wanted[0]} , given: "),
             ref.go_label(),
         )
-    return _skip_null(ref, viol_when(~ok, ref.path, info))
+    return _check(ref, out, ~ok, info)
 
 
 # ------------------------------------------------------- length bounds
@@ -191,30 +191,26 @@ def _length_of(ref: ValueRef) -> Column | None:
 def kw_max_length(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "maxLength", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         ln = _length_of(ref)
         if ln is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(ln > n, ref.path, f"length must be less or equal than {n}")
-        )
+            return out.none()
+        return _check(ref, out, ln > n, f"length must be less or equal than {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("minLength")
 def kw_min_length(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minLength", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         ln = _length_of(ref)
         if ln is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(ln < n, ref.path, f"length must be larger or equal than {n}")
-        )
+            return out.none()
+        return _check(ref, out, ln < n, f"length must be larger or equal than {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 def _int_operand(operand, kw, path) -> int:
@@ -257,19 +253,19 @@ def kw_maximum(operand, path, siblings, ctx) -> Rule:
     # (validator_base.go:365-375)
     exclusive = siblings.get("exclusiveMaximum") is True
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
+            return out.none()
         if exclusive:
             fail = ~(c < v)
             info = f"value must be  < {go_num(v)}"
         else:
             fail = ~(c <= v)
             info = f"value must be <= than {go_num(v)}"
-        return _skip_null(ref, F.when(c.isNull(), empty_violations()).otherwise(viol_when(fail, ref.path, info)))
+        return _check(ref, out, fail, info)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("minimum")
@@ -277,19 +273,19 @@ def kw_minimum(operand, path, siblings, ctx) -> Rule:
     v = _num_operand(operand, "minimum", path)
     exclusive = siblings.get("exclusiveMinimum") is True
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
+            return out.none()
         if exclusive:
             fail = ~(c > v)
             info = f"value must be larger than {go_num(v)}"
         else:
             fail = ~(c >= v)
             info = f"value must be larger or equal than {go_num(v)}"
-        return _skip_null(ref, F.when(c.isNull(), empty_violations()).otherwise(viol_when(fail, ref.path, info)))
+        return _check(ref, out, fail, info)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("exclusiveMaximum")
@@ -300,18 +296,13 @@ def kw_exclusive_maximum(operand, path, siblings, ctx) -> Rule | None:
         return None
     v = _num_operand(operand, "exclusiveMaximum", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
-        return _skip_null(
-            ref,
-            F.when(c.isNull(), empty_violations()).otherwise(
-                viol_when(~(c < v), ref.path, f"value should be < {go_v(operand)}")
-            ),
-        )
+            return out.none()
+        return _check(ref, out, ~(c < v), f"value should be < {go_v(operand)}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("exclusiveMinimum")
@@ -320,18 +311,13 @@ def kw_exclusive_minimum(operand, path, siblings, ctx) -> Rule | None:
         return None
     v = _num_operand(operand, "exclusiveMinimum", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
-        return _skip_null(
-            ref,
-            F.when(c.isNull(), empty_violations()).otherwise(
-                viol_when(~(c > v), ref.path, f"value should be > {go_v(operand)}")
-            ),
-        )
+            return out.none()
+        return _check(ref, out, ~(c > v), f"value should be > {go_v(operand)}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("multipleOf")
@@ -340,10 +326,10 @@ def kw_multiple_of(operand, path, siblings, ctx) -> Rule:
     if m == 0:
         raise SchemaError(f"multipleOf must not be 0, path:{path}")
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         c = _numeric_value(ref)
         if c is None:
-            return empty_violations()
+            return out.none()
         q = c / m
         fail = q != F.floor(q)
         info = F.concat(
@@ -352,12 +338,9 @@ def kw_multiple_of(operand, path, siblings, ctx) -> Rule:
             F.lit(", divide:"),
             string_of(q, T.DoubleType()),
         )
-        return _skip_null(
-            ref,
-            F.when(c.isNull(), empty_violations()).otherwise(viol_when(fail, ref.path, info)),
-        )
+        return _check(ref, out, fail, info)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # -------------------------------------------------------- enum / const
@@ -367,7 +350,7 @@ def _enum_rule(operand, path, keyword) -> Rule:
         raise SchemaError(f"value of '{keyword}' must be non-empty array, path:{path}")
     msg = f"value is invalid , shoule be one of {go_v(operand)}"  # sic (validator_base.go:477)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         dt = ref.dtype
         # coercing Equal keyed on LHS type (common.go:142-154)
         if isinstance(dt, T.VariantType):
@@ -383,7 +366,7 @@ def _enum_rule(operand, path, keyword) -> Rule:
                 .when(k == KIND_BOOL, ref.bool_of().isin(bools))
                 .otherwise(ref.str_of().isin(strs))
             )
-            return _skip_null(ref, viol_when(~ok, ref.path, msg))
+            return _check(ref, out, ~ok, msg)
         lits = [coerce_literal_for(dt, v) for v in operand]
         if dt is not None and _is_numeric(dt):
             ok = number_of(ref.col, dt).isin([float(x) for x in lits])
@@ -391,9 +374,9 @@ def _enum_rule(operand, path, keyword) -> Rule:
             ok = bool_of(ref.col, dt).isin([bool(x) for x in lits])
         else:
             ok = string_of(ref.col, dt).isin([str(x) for x in lits])
-        return _skip_null(ref, viol_when(~ok, ref.path, msg))
+        return _check(ref, out, ~ok, msg)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("enum")
@@ -411,11 +394,11 @@ def kw_const(operand, path, siblings, ctx) -> Rule:
     # const compares stringified (validator_base.go:762-782)
     sv = coerce_literal_for(T.StringType(), operand)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         ok = ref.str_of() == F.lit(sv)
-        return _skip_null(ref, viol_when(~ok, ref.path, f"value is invalid , expected: {sv}"))
+        return _check(ref, out, ~ok, f"value is invalid , expected: {sv}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # ------------------------------------------------------------ required
@@ -440,30 +423,22 @@ def kw_required(operand, path, siblings, ctx) -> Rule:
                     f"additionalProperties is not enabled! path:{path}"
                 )
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for k in keys:
             child = ref.child(k)
-            if not child.exists:
-                parts.append(violation(child.path, "field is required"))
-            elif isinstance(child.dtype, T.VariantType):
-                # exact m[key] presence (validator_base.go:500-512):
-                # a present key holding JSON null is NOT missing
-                parts.append(viol_when(child.missing(), child.path, "field is required"))
-            else:
-                parts.append(viol_when(child.null(), child.path, "field is required"))
-        from ..core.errors import concat_violations
-
-        out = concat_violations(*parts)
+            # exact m[key] presence on variants (validator_base.go:
+            # 500-512): a present key holding JSON null is NOT missing
+            # (missing() == null() on every other type)
+            parts.append(out.term(child.missing(), child.path, "field is required"))
+        v = out.join(parts)
         if isinstance(ref.dtype, T.VariantType):
             # non-object value: reference skips entirely
             # (value.(map[string]interface{}) guard)
-            out = F.when(
-                ref.v_object().isNull(), empty_violations()
-            ).otherwise(out)
-        return out
+            v = F.when(ref.v_object().isNull(), out.none()).otherwise(v)
+        return v
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # ------------------------------------------------------------- pattern
@@ -479,20 +454,20 @@ def kw_pattern(operand, path, siblings, ctx) -> Rule:
     except _re.error as e:
         raise SchemaError(f"invalid pattern at {path}: {e}") from e
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         dt = ref.dtype
         if isinstance(dt, T.VariantType):
             # strict view: non-strings are NULL -> check skips, exactly
             # the value.(string) guard (validator_strings.go:14-18)
             s = ref.v_string()
         elif dt is not None and not isinstance(dt, T.StringType):
-            return empty_violations()
+            return out.none()
         else:
             s = ref.col.cast("string")
         info = F.concat(s, F.lit(" ,value does not match pattern: "), F.lit(operand))
-        return _skip_null(ref, viol_when(~s.rlike(operand), ref.path, info))
+        return _check(ref, out, ~s.rlike(operand), info)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # --------------------------------------------------------------- items
@@ -501,18 +476,19 @@ def kw_pattern(operand, path, siblings, ctx) -> Rule:
 def kw_items(operand, path, siblings, ctx) -> Rule:
     sub = ctx.compile_node(operand, path + "[*]")
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         if isinstance(ref.dtype, T.VariantType):
             aref = _variant_array_ref(ref)
-            per_elem = F.transform(aref.col, lambda x: sub.violations(aref.element(x)))
+            per_elem = out.each(aref.col, lambda x: out.of(sub, aref.element(x)))
             # non-array at runtime: view is NULL -> transform NULL -> skip
-            return _skip_null(ref, F.coalesce(F.flatten(per_elem), empty_violations()))
+            return _skip_null(ref, out, F.coalesce(per_elem, out.none()))
         if not isinstance(ref.dtype, T.ArrayType):
-            return empty_violations()
-        per_elem = F.transform(ref.col, lambda x: sub.violations(ref.element(x)))
-        return _skip_null(ref, F.flatten(per_elem))
+            return out.none()
+        return _skip_null(
+            ref, out, out.each(ref.col, lambda x: out.of(sub, ref.element(x)))
+        )
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 def _variant_array_ref(ref: ValueRef) -> ValueRef:
@@ -530,6 +506,9 @@ def _variant_array_ref(ref: ValueRef) -> ValueRef:
     )
 
 
+_UNCOMPARABLE = " items should be comparable type,like [ string boolean number ]"
+
+
 @register_keyword("uniqueItems")
 def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
     if not isinstance(operand, bool):
@@ -537,7 +516,7 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
     if not operand:
         return None
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         dt = ref.dtype
         if isinstance(dt, T.VariantType):
             # per-element runtime comparability (Go map-key interface
@@ -556,76 +535,56 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
                 arr, lambda x: F.concat_ws("|", variant_kind(x), _vso(x))
             )
             dup = F.size(F.array_distinct(tags)) != F.size(tags)
-            out = (
-                F.when(arr.isNull(), empty_violations())  # non-array: skip
-                .when(
-                    has_container,
-                    violation(
-                        ref.path,
-                        " items should be comparable type,like [ string boolean number ]",
-                    ),
-                )
-                .otherwise(viol_when(dup, ref.path, " items should be unique"))
+            v = (
+                F.when(arr.isNull(), out.none())  # non-array: skip
+                .when(has_container, out.term(F.lit(True), ref.path, _UNCOMPARABLE))
+                .otherwise(out.term(dup, ref.path, " items should be unique"))
             )
-            return _skip_null(ref, out)
+            return _skip_null(ref, out, v)
         if not isinstance(dt, T.ArrayType):
-            return empty_violations()
+            return out.none()
         if not isinstance(
             dt.elementType, (T.StringType, T.BooleanType, T.NumericType)
         ):
-            return _skip_null(
-                ref,
-                violation(
-                    ref.path,
-                    " items should be comparable type,like [ string boolean number ]",
-                ),
-            )
+            return _check(ref, out, F.lit(True), _UNCOMPARABLE)
         fail = F.size(F.array_distinct(ref.col)) != F.size(ref.col)
-        return _skip_null(ref, viol_when(fail, ref.path, " items should be unique"))
+        return _check(ref, out, fail, " items should be unique")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("maxItems")
 def kw_max_items(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "maxItems", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         if isinstance(ref.dtype, T.VariantType):
             from ..core.variant import nn_size
 
             sz = nn_size(_variant_array_ref(ref).col)  # NULL unless array
-            return _skip_null(
-                ref, viol_when(sz > n, ref.path, f" max length is {n}")
-            )
+            return _check(ref, out, sz > n, f" max length is {n}")
         if not isinstance(ref.dtype, T.ArrayType):
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(F.size(ref.col) > n, ref.path, f" max length is {n}")
-        )
+            return out.none()
+        return _check(ref, out, F.size(ref.col) > n, f" max length is {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("minItems")
 def kw_min_items(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minItems", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         if isinstance(ref.dtype, T.VariantType):
             from ..core.variant import nn_size
 
             sz = nn_size(_variant_array_ref(ref).col)
-            return _skip_null(
-                ref, viol_when(sz < n, ref.path, f" min length is {n}")
-            )
+            return _check(ref, out, sz < n, f" min length is {n}")
         if not isinstance(ref.dtype, T.ArrayType):
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(F.size(ref.col) < n, ref.path, f" min length is {n}")
-        )
+            return out.none()
+        return _check(ref, out, F.size(ref.col) < n, f" min length is {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # --------------------------------------------- object key-count bounds
@@ -634,15 +593,13 @@ def kw_min_items(operand, path, siblings, ctx) -> Rule:
 def kw_min_properties(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minProperties", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         cnt = _prop_count(ref)
         if cnt is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(cnt < n, ref.path, f"min properties is : {n}")
-        )
+            return out.none()
+        return _check(ref, out, cnt < n, f"min properties is : {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("maxProperties")
@@ -656,15 +613,13 @@ def kw_max_properties(operand, path, siblings, ctx) -> Rule:
     if ctx.options.get("replicate_max_properties_bug"):
         return kw_min_properties(operand, path, siblings, ctx)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         cnt = _prop_count(ref)
         if cnt is None:
-            return empty_violations()
-        return _skip_null(
-            ref, viol_when(cnt > n, ref.path, f"max properties is :{n}")
-        )
+            return out.none()
+        return _check(ref, out, cnt > n, f"max properties is :{n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 def _prop_count(ref: ValueRef) -> Column | None:
@@ -699,33 +654,29 @@ def _prop_count(ref: ValueRef) -> Column | None:
 def kw_max_b64(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "maxB64DLen", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         s = _string_view(ref)
         if s is None:
-            return empty_violations()
+            return out.none()
         # Go base64.StdEncoding.DecodedLen = len/4*3 (validator_base.go:692-760)
         dlen = F.floor(F.octet_length(s) / 4) * 3
-        return _skip_null(
-            ref, viol_when(dlen > n, ref.path, f"length is invalid, max length is  {n}")
-        )
+        return _check(ref, out, dlen > n, f"length is invalid, max length is  {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("minB64DLen")
 def kw_min_b64(operand, path, siblings, ctx) -> Rule:
     n = _int_operand(operand, "minB64DLen", path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         s = _string_view(ref)
         if s is None:
-            return empty_violations()
+            return out.none()
         dlen = F.floor(F.octet_length(s) / 4) * 3
-        return _skip_null(
-            ref, viol_when(dlen < n, ref.path, f"length is invalid ,min length is  {n}")
-        )
+        return _check(ref, out, dlen < n, f"length is invalid ,min length is  {n}")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 def _string_view(ref: ValueRef) -> Column | None:
@@ -747,21 +698,18 @@ def kw_format(operand, path, siblings, ctx) -> Rule:
         raise SchemaError(f"value of 'format' must be string, path:{path}")
     check = compile_format(operand)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         if isinstance(ref.dtype, T.VariantType):
             s = ref.v_string()  # non-strings skip at runtime
         elif ref.dtype is not None and not isinstance(
             ref.dtype, (T.StringType, T.TimestampType, T.DateType)
         ):
-            return empty_violations()
+            return out.none()
         else:
             s = ref.col.cast("string")
-        return _skip_null(
-            ref,
-            viol_when(~check(s), ref.path, f"value does not match format '{operand}'"),
-        )
+        return _check(ref, out, ~check(s), f"value does not match format '{operand}'")
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # --------------------------------------------------------- dependencies
@@ -776,9 +724,7 @@ def kw_dependencies(operand, path, siblings, ctx) -> Rule:
             raise SchemaError(f"dependencies values must be arrays, path:{path}")
         deps[k] = [str(x) for x in v]
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for k, vs in deps.items():
             kc = ref.child(k)
@@ -787,16 +733,14 @@ def kw_dependencies(operand, path, siblings, ctx) -> Rule:
                 # m[key] PRESENCE on both sides (validator_logic.go:
                 # 198-218): a key holding JSON null counts as present
                 parts.append(
-                    viol_when(~kc.missing() & dc.missing(), dc.path, "is required")
+                    out.term(~kc.missing() & dc.missing(), dc.path, "is required")
                 )
-        out = concat_violations(*parts)
+        v = out.join(parts)
         if isinstance(ref.dtype, T.VariantType):
-            out = F.when(
-                ref.v_object().isNull(), empty_violations()
-            ).otherwise(out)
-        return out
+            v = F.when(ref.v_object().isNull(), out.none()).otherwise(v)
+        return v
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # ------------------------------------------------- children (sub-node)
@@ -809,22 +753,20 @@ def kw_children(operand, path, siblings, ctx) -> Rule:
         raise SchemaError(f"value of 'children' must be object, path:{path}")
     subs = {k: ctx.compile_node(v, f"{path}.{k}") for k, v in operand.items()}
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for k, sub in subs.items():
             child = ref.child(k)
             if not child.exists:
                 continue
             parts.append(
-                F.when(child.null(), empty_violations()).otherwise(
-                    sub.violations(child)
+                F.when(child.null(), out.none()).otherwise(
+                    out.of(sub, child)
                 )
             )
-        return concat_violations(*parts)
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # ------------------------------------- single-value string comparisons
@@ -835,15 +777,13 @@ def _compare_single(keyword: str, info: str, build_ok):
         if not isinstance(operand, str):
             raise SchemaError(f"{path} is not string")
 
-        def fn(ref: ValueRef) -> Column:
+        def emit(ref: ValueRef, out) -> Column:
             s = _string_view(ref)
             if s is None:
-                return empty_violations()
-            return _skip_null(
-                ref, viol_when(~_build(s, operand), ref.path, _info + operand)
-            )
+                return out.none()
+            return _check(ref, out, ~_build(s, operand), _info + operand)
 
-        return FnRule(fn)
+        return EmitRule(emit)
 
     return kw
 
@@ -866,27 +806,25 @@ def _compare_map(keyword: str, info: str, build_ok, numeric_rhs=False):
         compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
         silent = ctx.in_if
 
-        def fn(ref: ValueRef) -> Column:
-            from ..core.errors import concat_violations
-
+        def emit(ref: ValueRef, out) -> Column:
             parts = []
             for jp, val, raw in compiled:
                 target = resolve(ref, jp)
                 bound = val.bind(ref)
                 ok = _build(target, bound)
                 if silent:
-                    parts.append(viol_when(~ok, "", ""))
+                    parts.append(out.term(~ok, "", ""))
                 else:
                     parts.append(
-                        viol_when(
+                        out.term(
                             ~ok,
                             f"{ref.path}.{jp}" if not ref.is_root else f"$.{jp}",
                             _info + _static_str(raw),
                         )
                     )
-            return concat_violations(*parts)
+            return out.join(parts)
 
-        return FnRule(fn)
+        return EmitRule(emit)
 
     return kw
 
@@ -934,19 +872,17 @@ def kw_patterns(operand, path, siblings, ctx) -> Rule:
         _re.compile(pat)
         compiled.append((jp, pat))
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for jp, pat in compiled:
             target = resolve(ref, jp)
             ok = _zs(target).rlike(pat)
             parts.append(
-                viol_when(~ok, f"$.{jp}", "should match regular expression" + pat)
+                out.term(~ok, f"$.{jp}", "should match regular expression" + pat)
             )
-        return concat_violations(*parts)
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("neq")
@@ -955,8 +891,7 @@ def kw_neq(operand, path, siblings, ctx) -> Rule:
         raise SchemaError(f"{path} is not a map")
     compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
+    def emit(ref: ValueRef, out) -> Column:
         from ..core.refs import equal_refs
 
         parts = []
@@ -965,15 +900,15 @@ def kw_neq(operand, path, siblings, ctx) -> Rule:
             bound = val.bind(ref)
             eq = equal_refs(target, bound)
             parts.append(
-                viol_when(
+                out.term(
                     F.coalesce(eq, F.lit(False)),
                     f"$.{jp}",
                     "should not equal with " + _static_str(raw),
                 )
             )
-        return concat_violations(*parts)
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 # ------------------------------------------------------------ in/notin
@@ -987,8 +922,7 @@ def _in_rule(operand, path, ctx, negate: bool) -> Rule:
             raise SchemaError("'in' or 'notin' opt right value expect slice")
         compiled.append((jp, [parse_value(v) for v in lst], lst))
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
+    def emit(ref: ValueRef, out) -> Column:
         from ..core.refs import equal_refs
 
         parts = []
@@ -1000,12 +934,12 @@ def _in_rule(operand, path, ctx, negate: bool) -> Rule:
                 ok = ok | F.coalesce(equal_refs(target, b), F.lit(False))
             if negate:
                 # notin wraps in a Not -> "is not valid" (validator_logic.go:151)
-                parts.append(viol_when(ok, f"$.{jp}", "is not valid"))
+                parts.append(out.term(ok, f"$.{jp}", "is not valid"))
             else:
-                parts.append(viol_when(~ok, f"$.{jp}", "should be one of  " + go_v(raw)))
-        return concat_violations(*parts)
+                parts.append(out.term(~ok, f"$.{jp}", "should be one of  " + go_v(raw)))
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("in")
@@ -1052,9 +986,7 @@ def kw_ip_in(operand, path, siblings, ctx) -> Rule:
         num = octets[0] * 16777216 + octets[1] * 65536 + octets[2] * 256 + octets[3]
         return F.when(valid & in_range, num)
 
-    def fn(ref: ValueRef) -> Column:
-        from ..core.errors import concat_violations
-
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for jp, ranges, raw in compiled:
             target = resolve(ref, jp)
@@ -1063,7 +995,7 @@ def kw_ip_in(operand, path, siblings, ctx) -> Rule:
             for lo, hi in ranges:
                 ok = ok | ((num >= lo) & (num <= hi))
             ok = F.coalesce(ok, F.lit(False))  # unparseable ip fails
-            parts.append(viol_when(~ok, f"$.{jp}", " ip should be within " + go_v(raw)))
-        return concat_violations(*parts)
+            parts.append(out.term(~ok, f"$.{jp}", " ip should be within " + go_v(raw)))
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)

@@ -16,16 +16,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.errors import (
-    concat_violations,
-    empty_violations,
-    go_v,
-    viol_when,
-    violation,
-)
+from ..core.errors import concat_violations, empty_violations, go_v, violation
 from ..core.refs import ValueRef, equal_refs, resolve
 from ..functions.values import parse_value
-from .compiler import FnRule, Rule, SchemaError, register_keyword
+from .compiler import EmitRule, FnRule, Node, Rule, SchemaError, any_true, register_keyword
 
 
 @contextlib.contextmanager
@@ -75,7 +69,7 @@ def _properties(operand, path, siblings, ctx) -> Rule:
         add_node = ctx.compile_node(additional, f"{path}.*")
     declared = list(operand.keys())
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for k, node, sub in children:
             child = ref.child(k)
@@ -118,7 +112,7 @@ def _properties(operand, path, siblings, ctx) -> Rule:
                         b.col.cast(child.dtype) if child.dtype else b.col,
                     )
                     child = _replace(child, col=filled)
-            parts.append(node.violations(child))
+            parts.append(out.of(node, child))
         # unknown fields (validator_core.go:419): only meaningful when
         # additionalProperties present and not True
         if additional is False:
@@ -127,7 +121,7 @@ def _properties(operand, path, siblings, ctx) -> Rule:
                 for f_ in dt.fields:
                     if f_.name not in declared:
                         parts.append(
-                            viol_when(
+                            out.term(
                                 F.col(f_.name).isNotNull()
                                 if ref.is_root
                                 else ref.col.getField(f_.name).isNotNull(),
@@ -143,28 +137,26 @@ def _properties(operand, path, siblings, ctx) -> Rule:
                 unknown = F.filter(
                     keys_col, lambda k: ~k.isin(*declared) if declared else F.lit(True)
                 )
+                unknown_v = out.each(
+                    unknown,
+                    lambda k: out.term(
+                        F.lit(True), F.concat(F.lit(ref.path + "."), k), "unknown field"
+                    ),
+                )
                 parts.append(
                     F.when(
-                        ref.null() | unknown.isNull(), empty_violations()
-                    ).otherwise(
-                        F.transform(
-                            unknown,
-                            lambda k: F.struct(
-                                F.concat(F.lit(ref.path + "."), k).alias("path"),
-                                F.lit("unknown field").alias("info"),
-                            ),
-                        )
-                    )
+                        ref.null() | unknown.isNull(), out.none()
+                    ).otherwise(unknown_v)
                 )
         elif add_node is not None:
             dt = ref.dtype
             if isinstance(dt, T.StructType):
                 for f_ in dt.fields:
                     if f_.name not in declared:
-                        parts.append(add_node.violations(ref.child(f_.name)))
-        return concat_violations(*parts)
+                        parts.append(out.of(add_node, ref.child(f_.name)))
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("additionalProperties")
@@ -188,12 +180,10 @@ def kw_and(operand, path, siblings, ctx) -> Rule:
 def _all_of(operand, path, ctx) -> Rule:
     if not isinstance(operand, list):
         raise SchemaError(f"allOf must be an array, path:{path}")
-    nodes = [ctx.compile_node(sub, path) for sub in operand]
-
-    def fn(ref: ValueRef) -> Column:
-        return concat_violations(*[n.violations(ref) for n in nodes])
-
-    return FnRule(fn)
+    # a conjunction of schema objects is one node over their nodes
+    return Node(
+        [("allOf", ctx.compile_node(sub, path)) for sub in operand], {"allOf": operand}
+    )
 
 
 def _any_of(operand, path, ctx) -> Rule:
@@ -201,18 +191,15 @@ def _any_of(operand, path, ctx) -> Rule:
         raise SchemaError(f"anyOf must be an array, path:{path}")
     nodes = [ctx.compile_node(sub, path) for sub in operand]
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         # first passing branch wins; else all errors emitted
         # (validator_logic.go:12-43)
-        branch_viols = [n.violations(ref) for n in nodes]
-        ok = F.lit(False)
-        for bv in branch_viols:
-            ok = ok | (F.size(bv) == 0)
-        return F.when(ok, empty_violations()).otherwise(
-            concat_violations(*branch_viols)
+        ok = any_true([n.ok(ref) for n in nodes])
+        return F.when(ok, out.none()).otherwise(
+            out.join([out.of(n, ref) for n in nodes])
         )
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("anyOf")
@@ -235,39 +222,33 @@ def kw_one_of(operand, path, siblings, ctx) -> Rule:
 @register_keyword("not")
 def kw_not(operand, path, siblings, ctx) -> Rule:
     node = ctx.compile_node(operand, path)
-
-    def fn(ref: ValueRef) -> Column:
-        inner_ok = F.size(node.violations(ref)) == 0
-        return viol_when(inner_ok, ref.path, "is not valid")
-
-    return FnRule(fn)
+    return EmitRule(lambda ref, out: out.term(node.ok(ref), ref.path, "is not valid"))
 
 
 # ------------------------------------------------------- if/then/else
+
+_EMPTY = Node([], {})
+
 
 @register_keyword("if")
 def kw_if(operand, path, siblings, ctx) -> Rule:
     with _in_if(ctx):
         cond = ctx.compile_node(operand, path)
 
-    def cond_ok(ref: ValueRef) -> Column:
-        return F.size(cond.violations(ref)) == 0
-
-    then_node = else_node = None
+    then_node = else_node = _EMPTY
     if isinstance(siblings.get("then"), dict):
-        with _guard(ctx, cond_ok):
+        with _guard(ctx, cond.ok):
             then_node = ctx.compile_node(siblings["then"], path)
     if isinstance(siblings.get("else"), dict):
-        with _guard(ctx, lambda ref: ~cond_ok(ref)):
+        with _guard(ctx, cond.fails):
             else_node = ctx.compile_node(siblings["else"], path)
 
-    def fn(ref: ValueRef) -> Column:
-        ok = cond_ok(ref)
-        then_v = then_node.violations(ref) if then_node else empty_violations()
-        else_v = else_node.violations(ref) if else_node else empty_violations()
-        return F.when(ok, then_v).otherwise(else_v)
+    def emit(ref: ValueRef, out) -> Column:
+        return F.when(cond.ok(ref), out.of(then_node, ref)).otherwise(
+            out.of(else_node, ref)
+        )
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("then")
@@ -300,7 +281,7 @@ def kw_switch(operand, path, siblings, ctx) -> Rule:
     for cv, sub in cases.items():
         with _guard(ctx, lambda ref, _cv=cv: switch_val(ref) == F.lit(str(_cv))):
             case_nodes.append((str(cv), ctx.compile_node(sub, path)))
-    default_node = None
+    default_node = _EMPTY
     if isinstance(siblings.get("defaults"), dict):
         with _guard(
             ctx,
@@ -310,22 +291,20 @@ def kw_switch(operand, path, siblings, ctx) -> Rule:
         ):
             default_node = ctx.compile_node(siblings["defaults"], path)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         sv = switch_val(ref)
         expr = None
         for cv, node in case_nodes:
-            branch = node.violations(ref)
+            branch = out.of(node, ref)
             expr = (
                 F.when(sv == cv, branch)
                 if expr is None
                 else expr.when(sv == cv, branch)
             )
-        default_v = (
-            default_node.violations(ref) if default_node else empty_violations()
-        )
+        default_v = out.of(default_node, ref)
         return default_v if expr is None else expr.otherwise(default_v)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("case")
@@ -349,21 +328,21 @@ def _key_match(operand, path, ctx) -> Rule:
     compiled = [(jp, parse_value(v), v) for jp, v in operand.items()]
     silent = ctx.in_if
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for jp, val, raw in compiled:
             target = resolve(ref, jp)
             b = val.bind(ref)
             eq = F.coalesce(equal_refs(target, b), F.lit(False))
             if silent:
-                parts.append(viol_when(~eq, "", ""))
+                parts.append(out.term(~eq, "", ""))
             else:
                 parts.append(
-                    viol_when(~eq, f"$.{jp}", f"value must be {go_v(raw)}")
+                    out.term(~eq, f"$.{jp}", f"value must be {go_v(raw)}")
                 )
-        return concat_violations(*parts)
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)
 
 
 @register_keyword("keyMatch")
@@ -383,17 +362,25 @@ def kw_eq(operand, path, siblings, ctx) -> Rule:
 
 # ----------------------------------------------------------------- error
 
+class _Error(Rule):
+    """Fails unconditionally; only the violations array builds the
+    interpolated message."""
+
+    def __init__(self, val):
+        self.val = val
+
+    def violations(self, ref: ValueRef) -> Column:
+        return violation(ref.path, self.val.bind(ref).str_of())
+
+    def fails(self, ref: ValueRef) -> Column:
+        return F.lit(True)
+
+
 @register_keyword("error")
 def kw_error(operand, path, siblings, ctx) -> Rule:
     """Unconditional violation with interpolated message
     (validator_core.go:679-705); meaningful inside if/then/case."""
-    val = parse_value(operand)
-
-    def fn(ref: ValueRef) -> Column:
-        b = val.bind(ref)
-        return violation(ref.path, b.str_of())
-
-    return FnRule(fn)
+    return _Error(parse_value(operand))
 
 
 # ----------------------------------------------------------------- $ref
@@ -405,14 +392,13 @@ def kw_ref(operand, path, siblings, ctx) -> Rule:
     if not isinstance(operand, str):
         raise SchemaError(f"$ref must be string, path:{path}")
     if ctx.ref_depth >= ctx.max_ref_depth:
-        return FnRule(lambda ref: empty_violations())
+        return _EMPTY
     target = ctx.resolve_ref(operand)
     ctx.ref_depth += 1
     try:
-        node = ctx.compile_node(target, path)
+        return ctx.compile_node(target, path)
     finally:
         ctx.ref_depth -= 1
-    return FnRule(lambda ref: node.violations(ref))
 
 
 # ------------------------------------------------------------- foreach

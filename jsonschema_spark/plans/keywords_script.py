@@ -701,11 +701,18 @@ def kw_script(operand, path, siblings, ctx) -> Rule:
                     out = F.concat(out, v.str_())
                 bind_var(name, CVal(out, T.StringType()), guard)
                 return
-            if st.fn == "set" and len(st.args) == 2:
-                # counter.set(n) statement (funcs_obj.go:864-867):
-                # rebind to the stored numeric value
-                v = compile_expr(st.args[1], env)
-                bind_var(name, CVal(v.num(), T.DoubleType()), guard)
+            if st.fn in ("set", "add") and len(st.args) == 2:
+                # counter.set(n) / counter.add(n) statements
+                # (funcs_obj.go:864-870): rebind to the stored value
+                if isinstance(cur.dtype, (T.MapType, T.ArrayType)):
+                    raise SchemaError(
+                        f"{st.fn}({name}, x) on a map/array variable: use "
+                        f"the 3-arg set({name}, k, v), path:{path}"
+                    )
+                v = compile_expr(st.args[1], env).num()
+                if st.fn == "add":
+                    v = cur.num() + v
+                bind_var(name, CVal(v, T.DoubleType()), guard)
                 return
             if st.fn == "set":
                 if not isinstance(cur.dtype, T.MapType):
@@ -875,7 +882,7 @@ def kw_script(operand, path, siblings, ctx) -> Rule:
                             f"script if() effect must be return(...) or $.path = ... at {path}"
                         )
                 elif isinstance(st, Call) and st.fn in (
-                    "set_to", "seto", "set", "set_index", "delete", "write"
+                    "set_to", "seto", "set", "set_index", "delete", "write", "add"
                 ):
                     _exec_mutation_call(st, guard, env)
                 elif _is_break_stmt(st):

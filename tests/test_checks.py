@@ -46,10 +46,8 @@ def test_uniqueness_detects_duplicates(spark):
         [("c1", 0), ("c1", 1), ("c1", 1), ("c2", 0), ("c2", 0), ("c2", 0)],
         "conv_id string, turn_idx int",
     )
-    for salt, hf in ((0, False), (4, False), (0, True)):
-        chk = checks.Uniqueness(
-            keys=["conv_id", "turn_idx"], salt_buckets=salt, hash_first=hf
-        )
+    for salt in (0, 4):
+        chk = checks.Uniqueness(keys=["conv_id", "turn_idx"], salt_buckets=salt)
         dups = {(r["conv_id"], r["turn_idx"]): r["dup_count"]
                 for r in chk.duplicates(df).collect()}
         assert dups == {("c1", 1): 2, ("c2", 0): 3}
@@ -59,14 +57,10 @@ def test_uniqueness_detects_duplicates(spark):
 
 def test_uniqueness_pass_verdict(spark):
     df = spark.createDataFrame([("c1", 0), ("c1", 1)], "conv_id string, turn_idx int")
-    for hf in (False, True):
-        v = _verdict(
-            checks.Uniqueness(
-                keys=["conv_id", "turn_idx"], hash_first=hf
-            ).verdicts(df),
-            "uniqueness",
-        )
-        assert v["pass"] is True and v["violation_count"] == 0
+    v = _verdict(
+        checks.Uniqueness(keys=["conv_id", "turn_idx"]).verdicts(df), "uniqueness"
+    )
+    assert v["pass"] is True and v["violation_count"] == 0
 
 
 def test_referential_integrity(spark):

@@ -59,26 +59,6 @@ def test_uniqueness_is_hash_aggregate_not_sort(tdf):
     assert "SortAggregate" not in p
 
 
-def test_uniqueness_phase1_shuffles_hash_not_keys(tdf):
-    """hash_first plan (r5, opt-in — measured a net LOSS on short
-    compressible transcript keys, see Uniqueness docstring): the
-    corpus-wide exchange partitions on (partition_id, 64-bit hash),
-    never on the raw composite key.  The exact-key groupBy survives
-    only downstream of the candidate rejoin (aggregate-sized
-    input)."""
-    chk = checks.Uniqueness(keys=["conv_id", "turn_idx"], hash_first=True)
-    for d in (chk.duplicates(tdf), chk.verdicts(tdf)):
-        p = plan_of(d)
-        assert "__h" in p
-        # plans print root-first, so the DEEPEST exchange (the one fed
-        # by the scan — the corpus-wide shuffle) is the last match; it
-        # must carry __h.  Full-key partitionings may appear only
-        # nearer the root (post-rejoin, aggregate-sized).
-        last_ex = p.rfind("hashpartitioning")
-        assert last_ex != -1
-        assert "__h" in p[last_ex:p.find(")", last_ex)]
-
-
 def test_ri_is_broadcast_anti_join(spark, tdf):
     chk = checks.ReferentialIntegrity(
         dim=dim_roles(spark), fact_key="role", dim_key="role"

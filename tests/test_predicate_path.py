@@ -1,6 +1,9 @@
-"""Predicate-only compilation (plans/predicate.py): the fast verdict
-path must agree exactly with the violation-array path on every fixture
-schema, and fall back (return None) for out-of-subset keywords."""
+"""The failure predicate (CompiledSchema.fail_predicate) is the FAILS
+reading of the same keyword definitions that build the violations
+array: on every row it must equal ``size(violations) > 0`` — for the
+fixture schemas, for documents outside any keyword subset (script,
+foreach, $ref, additionalProperties, items of objects), for fixed
+columns and for JSON-string columns in both parse modes."""
 
 from __future__ import annotations
 
@@ -17,37 +20,52 @@ from jsonschema_spark.sources.fixtures import (
 )
 
 
-def _bad_counts(plan, df):
-    pred = plan.fail_predicate(df)
-    assert pred is not None, "expected predicate-path support"
-    fast = df.agg(F.sum(pred.cast("long")).alias("n")).collect()[0]["n"] or 0
-    slow = (
-        plan.annotate(df)
-        .agg(F.sum((F.size("violations") > 0).cast("long")).alias("n"))
-        .collect()[0]["n"]
-        or 0
-    )
-    return fast, slow
+def _bad_rows(plan, df, json_col=None, json_types=None) -> int:
+    """Assert fail_predicate == size(violations) > 0 row by row (same
+    projection, so rows pair up exactly); return the failing-row
+    count."""
+    if json_col is None:
+        pred = plan.fail_predicate(df)
+        ann = plan.annotate(df, col="__v")
+    else:
+        pred = plan.fail_predicate(df, json_col=json_col, json_types=json_types)
+        ann = plan.annotate_json(df, json_col, col="__v", json_types=json_types)
+    got = ann.select(pred.alias("p"), (F.size("__v") > 0).alias("s")).collect()
+    diff = [r for r in got if r["p"] != r["s"]]
+    assert not diff, f"{len(diff)} rows disagree, e.g. {diff[:3]}"
+    return sum(1 for r in got if r["s"])
+
+
+def _as_json(df, col="payload"):
+    return df.select(F.to_json(F.struct(*df.columns)).alias(col))
+
+
+def _every_path(plan, df) -> int:
+    """Fixed columns, then the same rows as JSON in both modes."""
+    bad = _bad_rows(plan, df)
+    doc = _as_json(df)
+    for mode in ("static", "variant"):
+        _bad_rows(plan, doc, json_col="payload", json_types=mode)
+    return bad
 
 
 def test_predicate_equals_arrays_transcripts(spark):
-    df = transcripts(spark, n_convs=400).cache()
+    df = transcripts(spark, n_convs=200).cache()
     for doc in (TRANSCRIPT_CORE_SCHEMA, TRANSCRIPT_FULL_SCHEMA):
-        fast, slow = _bad_counts(js.compile_schema(doc), df)
-        assert fast == slow and fast > 0
+        assert _every_path(js.compile_schema(doc), df) > 0
     df.unpersist()
 
 
 def test_predicate_equals_arrays_gateway(spark):
-    df = gateway_requests(spark, n_rows=20_000).cache()
-    fast, slow = _bad_counts(js.compile_schema(GATEWAY_SCHEMA), df)
-    assert fast == slow and fast > 0
+    df = gateway_requests(spark, n_rows=5_000).cache()
+    assert _every_path(js.compile_schema(GATEWAY_SCHEMA), df) > 0
     df.unpersist()
 
 
 def test_predicate_equals_arrays_combinators(spark):
     df = spark.createDataFrame(
-        [(1, "BUILDING", 10.0), (2, "FURNITURE", 100.0), (3, "HOUSE", -5.0)],
+        [(1, "BUILDING", 10.0), (2, "FURNITURE", 100.0), (3, "HOUSE", -5.0),
+         (4, "MACHINERY", None)],
         "id int, seg string, bal double",
     )
     doc = {
@@ -57,20 +75,62 @@ def test_predicate_equals_arrays_combinators(spark):
         },
         "switch": "seg",
         "case": {"FURNITURE": {"gt": {"bal": 500}}},
+        "defaults": {"oneOf": [{"required": ["bal"]}, {"lt": {"id": 2}}]},
     }
-    fast, slow = _bad_counts(js.compile_schema(doc), df)
-    assert fast == slow
+    assert _bad_rows(js.compile_schema(doc), df) == 3
 
 
-def test_predicate_falls_back_for_exotic_keywords(spark):
-    df = spark.createDataFrame([(1, "x")], "id int, s string")
-    plan = js.compile_schema({"script": ["if($.id > 5, return('big'))"]})
-    assert plan.fail_predicate(df) is None  # script is out of subset
-    # the SchemaCheck still works via the array path
+@pytest.fixture()
+def nested_df(spark):
+    return spark.createDataFrame(
+        [
+            (1, "ab", [{"q": 1}, {"q": 200}], {"k": "v"}),
+            (2, None, [], None),
+            (3, "toolong", None, {"k": "v", "z": "w"}),
+            (4, "x", [{"q": None}], {}),
+        ],
+        "id int, s string, items array<struct<q:int>>, m map<string,string>",
+    )
+
+
+# documents the former second compiler did not cover (they fell back
+# to the array path): every one now gets the predicate, and it agrees
+FORMER_FALLBACK_DOCS = {
+    "script": {"script": ["if($.id > 1, return('big'))"]},
+    "foreach": {"foreach": {"items": {"lte": {"__val.q": 100}}}},
+    "ref": {
+        "$defs": {"short": {"maxLength": 3}},
+        "properties": {"s": {"$ref": "#/$defs/short"}},
+    },
+    "additional_false_struct": {
+        "properties": {"id": {}, "s": {}, "items": {}},
+        "additionalProperties": False,
+    },
+    "additional_false_map": {
+        "properties": {"m": {"properties": {"k": {}}, "additionalProperties": False}},
+    },
+    "items_of_objects": {
+        "properties": {
+            "items": {"items": {"required": ["q"], "properties": {"q": {"maximum": 100}}}},
+        },
+    },
+}
+
+
+def test_predicate_equals_arrays_former_fallback_docs(spark, nested_df):
+    for name, doc in FORMER_FALLBACK_DOCS.items():
+        assert _every_path(js.compile_schema(doc), nested_df) > 0, name
+
+
+def test_schemacheck_counts_match_arrays(spark, nested_df):
+    """SchemaCheck verdicts come from the predicate for any document —
+    a script document included — and carry only rows/bad_rows."""
     from jsonschema_spark.operators import checks
 
-    v = checks.SchemaCheck(plan=plan).verdicts(df).collect()
-    assert v[0]["pass"] is True
+    plan = js.compile_schema(FORMER_FALLBACK_DOCS["script"])
+    v = checks.SchemaCheck(plan=plan).verdicts(nested_df).collect()[0]
+    assert dict(v["metrics"]) == {"rows": "4", "bad_rows": "3"}
+    assert v["pass"] is False
 
 
 def test_schemacheck_uses_predicate_counts(spark):
@@ -106,12 +166,11 @@ def test_predicate_full_keyword_breadth(spark):
         },
         "ipIn": {"ip": ["10.0.0.0/24"]},
         "in": {"hobby": ["ball", "game"]},
+        "notin": {"hobby": ["golf"]},
         "patterns": {"ip": "^[0-9.]*$"},
         "children": {"mail": {"minLength": 3}},
     }
-    plan = js.compile_schema(doc)
-    fast, slow = _bad_counts(plan, df)
-    assert fast == slow
+    assert _bad_rows(js.compile_schema(doc), df) == 2
 
 
 def test_predicate_eq_missing_target_matches_array_path(spark):
@@ -126,5 +185,4 @@ def test_predicate_eq_missing_target_matches_array_path(spark):
         ({"neq": {"missing_field": ""}}, 2),
         ({"neq": {"missing_field": "x"}}, 0),
     ):
-        fast, slow = _bad_counts(js.compile_schema(doc), df)
-        assert fast == slow == expect_bad, (doc, fast, slow)
+        assert _bad_rows(js.compile_schema(doc), df) == expect_bad, doc

@@ -988,6 +988,33 @@ class TestStatefulHelpers:
         row = plan.transform(docs).collect()[0]
         assert row["hd"] == "8" and row["sms"] == "10"
 
+    def test_atomic_int_statement_add_accumulates(self, spark, docs):
+        # statement-position c.add(n) / add(c, n) mutates the counter
+        # like atomic.Add (funcs_obj.go:868-870)
+        plan = js.compile_schema(
+            {"script": [
+                "c = atomic_int(1)",
+                "c.add(2)",
+                "add(c, 4)",
+                "return(c.get())",
+            ]}
+        )
+        v = plan.validate(docs).violations.collect()
+        assert [r["info"] for r in v] == ["err :[7]"] * 3  # one per row
+
+    def test_statement_two_arg_set_on_map_rejected(self, spark, docs):
+        with pytest.raises(js.SchemaError, match="3-arg set"):
+            js.compile_schema(
+                {"script": ["m = url_new_values()", "set(m, 'k')", "$.hd = m.encode()"]}
+            ).transform(docs)
+
+    def test_expr_two_arg_set_on_array_rejected(self, spark, docs):
+        plan = js.compile_schema(
+            {"script": ["xs = ['a']", "$.hd = string(set(xs, 1))"]}
+        )
+        with pytest.raises(ExprError, match="3-arg set"):
+            plan.transform(docs)
+
     def test_operator_text_string_literals_parse(self, spark, docs):
         # r5 parser fix: a STRING token whose text is an operator
         # ('!', '-', 'in', ...) must stay a literal — previously the

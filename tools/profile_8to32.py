@@ -52,8 +52,6 @@ JOBS = {
     "validate": "full-keyword validation + verdict agg (the scaling job)",
     "uniqueness": "one corpus-wide hash-agg shuffle on (conv_id, turn_idx)",
     "windowrank": "conv_id shuffle + per-conversation sort (window rank)",
-    "uniqueness_hashfirst": "uniqueness with 64-bit-hash phase 1 + exact rejoin "
-                            "(r5 measurement: LOSES on short compressible keys)",
     "uniqueness_bucketed": "uniqueness over the conv_id-bucketed table: "
                            "ZERO corpus exchange (storage layout answer)",
     "windowrank_bucketed": "window rank over the conv_id-bucketed table: "
@@ -76,13 +74,10 @@ def _job_df(spark, job: str, path: str):
         df = spark.table(bench.transcripts_bucketed(spark, N_CONVS))
     else:
         df = spark.read.parquet(path)
-    if job in ("uniqueness", "uniqueness_bucketed", "uniqueness_hashfirst"):
+    if job in ("uniqueness", "uniqueness_bucketed"):
         from jsonschema_spark.operators import checks
 
-        return checks.Uniqueness(
-            keys=["conv_id", "turn_idx"],
-            hash_first=(job == "uniqueness_hashfirst"),
-        ).verdicts(df)
+        return checks.Uniqueness(keys=["conv_id", "turn_idx"]).verdicts(df)
     if job in ("windowrank", "windowrank_bucketed"):
         w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts")
         return (
