@@ -21,6 +21,7 @@ accumulation order matches ``ArrProp.Validate``
 
 from __future__ import annotations
 
+import inspect
 import itertools
 
 from dataclasses import dataclass, field
@@ -50,6 +51,12 @@ class Rule:
 
     def fails(self, ref: ValueRef) -> Column:
         return F.size(self.violations(ref)) > 0
+
+    def any_kernel(self, aref: ValueRef) -> Optional[Column]:
+        """Never-NULL "some element of the typed array at ``aref`` fails
+        this rule", written without a higher-order function; None when
+        this rule has no such form for the array's element type."""
+        return None
 
 
 class FnRule(Rule):
@@ -88,6 +95,9 @@ class _Violations:
     def each(self, arr: Column, fn) -> Column:
         return F.flatten(F.transform(arr, fn))
 
+    def of_each(self, rule: Node, aref: ValueRef) -> Column:
+        return F.flatten(F.transform(aref.col, lambda x: rule.violations(aref.element(x))))
+
 
 class _Fails:
     """``EmitRule`` reading that builds the never-NULL failure
@@ -107,7 +117,15 @@ class _Fails:
         return any_true(parts)
 
     def each(self, arr: Column, fn) -> Column:
+        if len(inspect.signature(fn).parameters) == 2:
+            # fn(x, i) like F.transform; exists passes no index, so pair
+            # each element with its position first
+            arr = F.transform(arr, lambda x, i: F.struct(x.alias("x"), i.alias("i")))
+            return self.each(arr, lambda s: fn(s["x"], s["i"]))
         return F.coalesce(F.exists(arr, fn), F.lit(False))
+
+    def of_each(self, rule: Node, aref: ValueRef) -> Column:
+        return rule.fails_any(aref)
 
 
 VIOLATIONS = _Violations()
@@ -117,17 +135,31 @@ FAILS = _Fails()
 class EmitRule(Rule):
     """A keyword defined once, as ``emit(ref, out)``: it states its
     ``(cond, path, info)`` terms (``out.term``), the sub-rules it runs
-    (``out.of``) and how they combine (``out.join``, ``out.each``,
-    ``out.none`` and ordinary ``F.when`` branches).  ``out=VIOLATIONS``
-    reads that as the violations array, ``out=FAILS`` as the failure
-    condition — two readings of one definition, so they cannot
-    disagree."""
+    (``out.of``, ``out.of_each`` per array element) and how they
+    combine (``out.join``, ``out.each`` — ``fn(x)`` or ``fn(x, i)``
+    per element, as ``F.transform`` — ``out.none`` and ordinary
+    ``F.when`` branches).  ``out=VIOLATIONS`` reads that as the
+    violations array, ``out=FAILS`` as the failure condition — two
+    readings of one definition, so they cannot disagree.
 
-    def __init__(self, emit: Callable[[ValueRef, object], Column]):
+    ``any_kernel(aref)``, when given, is the FAILS reading over a whole
+    array's elements written with lambda-free array functions; it must
+    equal ``exists(arr, x -> fails(x))`` row by row (pinned in
+    tests/test_predicate_path.py)."""
+
+    def __init__(
+        self,
+        emit: Callable[[ValueRef, object], Column],
+        any_kernel: Callable[[ValueRef], Optional[Column]] | None = None,
+    ):
         self._emit = emit
+        self._any_kernel = any_kernel
 
     def emit(self, ref: ValueRef, out) -> Column:
         return self._emit(ref, out)
+
+    def any_kernel(self, aref: ValueRef) -> Optional[Column]:
+        return self._any_kernel(aref) if self._any_kernel is not None else None
 
     def violations(self, ref: ValueRef) -> Column:
         return self.emit(ref, VIOLATIONS)
@@ -242,6 +274,33 @@ class Node(EmitRule):
 
     def emit(self, ref: ValueRef, out) -> Column:
         return out.join([out.of(r, ref) for _, r in self.rules])
+
+    def _split(self, aref: ValueRef) -> tuple[list[Column], list[Rule]]:
+        """(kernels of the rules that have one, the rules that do not)."""
+        kernels, rest = [], []
+        for _, r in self.rules:
+            k = r.any_kernel(aref)
+            if k is None:
+                rest.append(r)
+            else:
+                kernels.append(k)
+        return kernels, rest
+
+    def any_kernel(self, aref: ValueRef) -> Optional[Column]:
+        kernels, rest = self._split(aref)
+        return None if rest else any_true(kernels)
+
+    def fails_any(self, aref: ValueRef) -> Column:
+        """Never-NULL: some element of the typed array at ``aref`` fails
+        this node.  A lambda (``exists``) is CodegenFallback and takes
+        the whole stage out of codegen, so rules with an ``any_kernel``
+        use it; the rest share ONE ``exists``."""
+        kernels, rest = self._split(aref)
+        if rest:
+            kernels.append(
+                FAILS.each(aref.col, lambda x: any_true([r.fails(aref.element(x)) for r in rest]))
+            )
+        return any_true(kernels)
 
     def ok(self, ref: ValueRef) -> Column:
         return ~self.fails(ref)

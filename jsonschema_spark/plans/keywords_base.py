@@ -68,6 +68,25 @@ def _type_names(dt) -> set[str]:
     return set()
 
 
+def _elem_type(aref: ValueRef):
+    """Element dtype of a statically typed array ref; None for variant
+    elements and non-arrays (their rules keep the lambda)."""
+    dt = aref.dtype
+    if isinstance(dt, T.ArrayType) and not isinstance(dt.elementType, T.VariantType):
+        return dt.elementType
+    return None
+
+
+def _some_non_null(arr: Column) -> Column:
+    """Some element of an array of orderable scalars is non-NULL
+    (array_max skips NULLs; an empty or NULL array gives NULL)."""
+    return F.array_max(arr).isNotNull()
+
+
+def _is_scalar(dt) -> bool:
+    return isinstance(dt, (T.StringType, T.BooleanType, T.NumericType))
+
+
 # --------------------------------------------------------------- type
 
 @register_keyword("type")
@@ -106,7 +125,22 @@ def kw_type(operand, path, siblings, ctx) -> Rule:
             info = F.lit(f"Invalid type, expected: {wanted[0]} , given: {given}")
         return _check(ref, out, ~ok, info)
 
-    return EmitRule(emit)
+    def any_kernel(aref: ValueRef) -> Column | None:
+        # a typed element's check is decided by its dtype alone (except
+        # integer on a fractional type): fold it at build time
+        if "any" in wanted:
+            return F.lit(False)
+        dt = _elem_type(aref)
+        if dt is None:
+            return None
+        have = _type_names(dt)
+        if any(w in have for w in wanted):
+            return F.lit(False)
+        if "integer" in wanted and _is_numeric(dt) or not _is_scalar(dt):
+            return None
+        return _some_non_null(aref.col)
+
+    return EmitRule(emit, any_kernel)
 
 
 def _type_variant(ref: ValueRef, out, wanted, union, operand) -> Column:
@@ -246,46 +280,34 @@ def _numeric_value(ref: ValueRef) -> Column | None:
     return None
 
 
+def _bound_rule(fail, info: str) -> Rule:
+    """A numeric bound: a value fails when ``fail(c)`` (NULL passes)."""
+
+    def emit(ref: ValueRef, out) -> Column:
+        c = _numeric_value(ref)
+        if c is None:
+            return out.none()
+        return _check(ref, out, fail(c), info)
+
+    return EmitRule(emit)
+
+
 @register_keyword("maximum")
 def kw_maximum(operand, path, siblings, ctx) -> Rule:
     v = _num_operand(operand, "maximum", path)
     # sibling bool exclusiveMaximum folds into a strict bound
     # (validator_base.go:365-375)
-    exclusive = siblings.get("exclusiveMaximum") is True
-
-    def emit(ref: ValueRef, out) -> Column:
-        c = _numeric_value(ref)
-        if c is None:
-            return out.none()
-        if exclusive:
-            fail = ~(c < v)
-            info = f"value must be  < {go_num(v)}"
-        else:
-            fail = ~(c <= v)
-            info = f"value must be <= than {go_num(v)}"
-        return _check(ref, out, fail, info)
-
-    return EmitRule(emit)
+    if siblings.get("exclusiveMaximum") is True:
+        return _bound_rule(lambda c: ~(c < v), f"value must be  < {go_num(v)}")
+    return _bound_rule(lambda c: ~(c <= v), f"value must be <= than {go_num(v)}")
 
 
 @register_keyword("minimum")
 def kw_minimum(operand, path, siblings, ctx) -> Rule:
     v = _num_operand(operand, "minimum", path)
-    exclusive = siblings.get("exclusiveMinimum") is True
-
-    def emit(ref: ValueRef, out) -> Column:
-        c = _numeric_value(ref)
-        if c is None:
-            return out.none()
-        if exclusive:
-            fail = ~(c > v)
-            info = f"value must be larger than {go_num(v)}"
-        else:
-            fail = ~(c >= v)
-            info = f"value must be larger or equal than {go_num(v)}"
-        return _check(ref, out, fail, info)
-
-    return EmitRule(emit)
+    if siblings.get("exclusiveMinimum") is True:
+        return _bound_rule(lambda c: ~(c > v), f"value must be larger than {go_num(v)}")
+    return _bound_rule(lambda c: ~(c >= v), f"value must be larger or equal than {go_num(v)}")
 
 
 @register_keyword("exclusiveMaximum")
@@ -295,14 +317,7 @@ def kw_exclusive_maximum(operand, path, siblings, ctx) -> Rule | None:
     if isinstance(operand, bool):
         return None
     v = _num_operand(operand, "exclusiveMaximum", path)
-
-    def emit(ref: ValueRef, out) -> Column:
-        c = _numeric_value(ref)
-        if c is None:
-            return out.none()
-        return _check(ref, out, ~(c < v), f"value should be < {go_v(operand)}")
-
-    return EmitRule(emit)
+    return _bound_rule(lambda c: ~(c < v), f"value should be < {go_v(operand)}")
 
 
 @register_keyword("exclusiveMinimum")
@@ -310,14 +325,7 @@ def kw_exclusive_minimum(operand, path, siblings, ctx) -> Rule | None:
     if isinstance(operand, bool):
         return None
     v = _num_operand(operand, "exclusiveMinimum", path)
-
-    def emit(ref: ValueRef, out) -> Column:
-        c = _numeric_value(ref)
-        if c is None:
-            return out.none()
-        return _check(ref, out, ~(c > v), f"value should be > {go_v(operand)}")
-
-    return EmitRule(emit)
+    return _bound_rule(lambda c: ~(c > v), f"value should be > {go_v(operand)}")
 
 
 @register_keyword("multipleOf")
@@ -350,6 +358,15 @@ def _enum_rule(operand, path, keyword) -> Rule:
         raise SchemaError(f"value of '{keyword}' must be non-empty array, path:{path}")
     msg = f"value is invalid , shoule be one of {go_v(operand)}"  # sic (validator_base.go:477)
 
+    def values_for(dt) -> list:
+        """The operand coerced for an LHS of type ``dt``."""
+        lits = [coerce_literal_for(dt, v) for v in operand]
+        if dt is not None and _is_numeric(dt):
+            return [float(x) for x in lits]
+        if isinstance(dt, T.BooleanType):
+            return [bool(x) for x in lits]
+        return [str(x) for x in lits]
+
     def emit(ref: ValueRef, out) -> Column:
         dt = ref.dtype
         # coercing Equal keyed on LHS type (common.go:142-154)
@@ -358,25 +375,31 @@ def _enum_rule(operand, path, keyword) -> Rule:
             from ..core.variant import KIND_BOOL, KIND_NUMBER
 
             k = ref.v_kind()
-            nums = [float(coerce_literal_for(T.DoubleType(), v)) for v in operand]
-            bools = [bool(coerce_literal_for(T.BooleanType(), v)) for v in operand]
-            strs = [str(coerce_literal_for(T.StringType(), v)) for v in operand]
             ok = (
-                F.when(k == KIND_NUMBER, ref.num_of().isin(nums))
-                .when(k == KIND_BOOL, ref.bool_of().isin(bools))
-                .otherwise(ref.str_of().isin(strs))
+                F.when(k == KIND_NUMBER, ref.num_of().isin(values_for(T.DoubleType())))
+                .when(k == KIND_BOOL, ref.bool_of().isin(values_for(T.BooleanType())))
+                .otherwise(ref.str_of().isin(values_for(T.StringType())))
             )
             return _check(ref, out, ~ok, msg)
-        lits = [coerce_literal_for(dt, v) for v in operand]
         if dt is not None and _is_numeric(dt):
-            ok = number_of(ref.col, dt).isin([float(x) for x in lits])
+            view = number_of(ref.col, dt)
         elif isinstance(dt, T.BooleanType):
-            ok = bool_of(ref.col, dt).isin([bool(x) for x in lits])
+            view = bool_of(ref.col, dt)
         else:
-            ok = string_of(ref.col, dt).isin([str(x) for x in lits])
-        return _check(ref, out, ~ok, msg)
+            view = string_of(ref.col, dt)
+        return _check(ref, out, ~view.isin(values_for(dt)), msg)
 
-    return EmitRule(emit)
+    def any_kernel(aref: ValueRef) -> Column | None:
+        # remove every allowed value; a non-NULL leftover fails
+        dt = _elem_type(aref)
+        if not _is_scalar(dt):
+            return None
+        arr = aref.col.cast("array<double>") if _is_numeric(dt) else aref.col
+        for x in dict.fromkeys(values_for(dt)):
+            arr = F.array_remove(arr, x)
+        return _some_non_null(arr)
+
+    return EmitRule(emit, any_kernel)
 
 
 @register_keyword("enum")
@@ -479,14 +502,12 @@ def kw_items(operand, path, siblings, ctx) -> Rule:
     def emit(ref: ValueRef, out) -> Column:
         if isinstance(ref.dtype, T.VariantType):
             aref = _variant_array_ref(ref)
-            per_elem = out.each(aref.col, lambda x: out.of(sub, aref.element(x)))
+            per_elem = out.of_each(sub, aref)
             # non-array at runtime: view is NULL -> transform NULL -> skip
             return _skip_null(ref, out, F.coalesce(per_elem, out.none()))
         if not isinstance(ref.dtype, T.ArrayType):
             return out.none()
-        return _skip_null(
-            ref, out, out.each(ref.col, lambda x: out.of(sub, ref.element(x)))
-        )
+        return _skip_null(ref, out, out.of_each(sub, ref))
 
     return EmitRule(emit)
 
@@ -543,9 +564,7 @@ def kw_unique_items(operand, path, siblings, ctx) -> Rule | None:
             return _skip_null(ref, out, v)
         if not isinstance(dt, T.ArrayType):
             return out.none()
-        if not isinstance(
-            dt.elementType, (T.StringType, T.BooleanType, T.NumericType)
-        ):
+        if not _is_scalar(dt.elementType):
             return _check(ref, out, F.lit(True), _UNCOMPARABLE)
         fail = F.size(F.array_distinct(ref.col)) != F.size(ref.col)
         return _check(ref, out, fail, " items should be unique")

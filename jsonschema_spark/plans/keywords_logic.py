@@ -16,10 +16,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.errors import concat_violations, empty_violations, go_v, violation
+from ..core.errors import go_v, violation
 from ..core.refs import ValueRef, equal_refs, resolve
 from ..functions.values import parse_value
-from .compiler import EmitRule, FnRule, Node, Rule, SchemaError, any_true, register_keyword
+from .compiler import EmitRule, Node, Rule, SchemaError, any_true, register_keyword
 
 
 @contextlib.contextmanager
@@ -757,10 +757,12 @@ def kw_foreach(operand, path, siblings, ctx) -> Rule:
     Columnar mapping: assertions compile to ``F.transform`` over the
     array (or map_entries) with a lambda-scoped root ref whose bindings
     resolve __key/__val; per-element violation arrays are flattened
-    into the row's list.  The reference's cross-element MUTATION
-    accumulation (`set` of a top-level key per element, nested foreach
-    included — the `line` example, benchmark_test.go:411-423) compiles
-    to ONE nested F.aggregate fold registered as a single TransformOp:
+    into the row's list; the failure condition is ``exists`` over the
+    same bound elements, with no path or message strings built.  The
+    reference's cross-element MUTATION accumulation (`set` of a
+    top-level key per element, nested foreach included — the `line`
+    example, benchmark_test.go:411-423) compiles to ONE nested
+    F.aggregate fold registered as a single TransformOp:
     each `set` target becomes a typed accumulator threaded through the
     iteration in document order, `${target}` inside the template reads
     the running value via a root binding.  Other mutation keywords
@@ -808,7 +810,7 @@ def kw_foreach(operand, path, siblings, ctx) -> Rule:
     if elem_entries:
         _register_foreach_elem_writes(ctx, elem_entries)
 
-    def fn(ref: ValueRef) -> Column:
+    def emit(ref: ValueRef, out) -> Column:
         parts = []
         for jp, node in entries:
             target = resolve(ref, jp)
@@ -829,11 +831,11 @@ def kw_foreach(operand, path, siblings, ctx) -> Rule:
                                 "__val": ValueRef(v, _dt.elementType, "$.__val"),
                             },
                         )
-                        return _node.violations(bound)
+                        return out.of(_node, bound)
 
                     return per_elem
 
-                viols = F.flatten(F.transform(target.col, make_per_elem(node, dt)))
+                viols = out.each(target.col, make_per_elem(node, dt))
             elif isinstance(dt, T.MapType):
                 def make_per_entry(_node, _dt):
                     def per_entry(e):
@@ -845,13 +847,11 @@ def kw_foreach(operand, path, siblings, ctx) -> Rule:
                                 "__val": ValueRef(e["value"], _dt.valueType, "$.__val"),
                             },
                         )
-                        return _node.violations(bound)
+                        return out.of(_node, bound)
 
                     return per_entry
 
-                viols = F.flatten(
-                    F.transform(F.map_entries(target.col), make_per_entry(node, dt))
-                )
+                viols = out.each(F.map_entries(target.col), make_per_entry(node, dt))
             elif isinstance(dt, T.VariantType):
                 # runtime container dispatch: object -> (key,val) walk,
                 # array -> (index,val) walk, scalar -> skip
@@ -873,22 +873,24 @@ def kw_foreach(operand, path, siblings, ctx) -> Rule:
                 # `_node=node` default would receive the element index
                 def make_entry_v(_node):
                     def per_entry_v(e):
-                        return _node.violations(
+                        return out.of(
+                            _node,
                             bind_kv(
                                 ValueRef(e["key"], T.StringType(), "$.__key"),
                                 ValueRef(e["value"], T.VariantType(), "$.__val"),
-                            )
+                            ),
                         )
 
                     return per_entry_v
 
                 def make_elem_v(_node):
                     def per_elem_v(v, i):
-                        return _node.violations(
+                        return out.of(
+                            _node,
                             bind_kv(
                                 ValueRef(i.cast("long"), T.LongType(), "$.__key"),
                                 ValueRef(v, T.VariantType(), "$.__val"),
-                            )
+                            ),
                         )
 
                     return per_elem_v
@@ -897,19 +899,14 @@ def kw_foreach(operand, path, siblings, ctx) -> Rule:
                 per_elem_v = make_elem_v(node)
 
                 viols = (
-                    F.when(
-                        obj.isNotNull(),
-                        F.flatten(F.transform(F.map_entries(obj), per_entry_v)),
-                    )
-                    .when(arr.isNotNull(), F.flatten(F.transform(arr, per_elem_v)))
-                    .otherwise(empty_violations())
+                    F.when(obj.isNotNull(), out.each(F.map_entries(obj), per_entry_v))
+                    .when(arr.isNotNull(), out.each(arr, per_elem_v))
+                    .otherwise(out.none())
                 )
             else:
                 # non-container at runtime: reference silently skips
                 continue
-            parts.append(
-                F.when(target.null(), empty_violations()).otherwise(viols)
-            )
-        return concat_violations(*parts)
+            parts.append(F.when(target.null(), out.none()).otherwise(viols))
+        return out.join(parts)
 
-    return FnRule(fn)
+    return EmitRule(emit)

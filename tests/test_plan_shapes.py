@@ -4,12 +4,19 @@ partial aggregation, no cartesian, no Python in the hot path)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
 from jsonschema_spark.operators import checks, dedup, similarity
-from jsonschema_spark.sources.fixtures import dim_roles, transcripts
+from jsonschema_spark.sources.fixtures import (
+    GATEWAY_SCHEMA,
+    dim_roles,
+    gateway_requests,
+    transcripts,
+)
 
 
 def plan_of(df) -> str:
@@ -184,9 +191,10 @@ def test_json_column_validation_single_projection(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_script_for_fold_stays_codegen(spark):
-    """The for-statement fold is a higher-order aggregate inside the
-    projection: no shuffle, no Python."""
+def test_script_for_fold_stays_in_jvm_projection(spark):
+    """The for-statement fold is a higher-order ``aggregate`` inside the
+    projection: no shuffle, no Python.  Its lambda is CodegenFallback,
+    so the projection is interpreted, not whole-stage codegen'd."""
     df = spark.createDataFrame([(1, [1.0, 2.0])], "id int, xs array<double>")
     plan = js.compile_schema(
         {"script": ["s = 0", {"for": "i,x in $.xs", "do": ["s = s + x"]},
@@ -195,6 +203,32 @@ def test_script_for_fold_stays_codegen(spark):
     p = plan_of(plan.transform(df))
     assert "Exchange" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+
+
+@pytest.mark.parametrize("case", ["gateway", "items_of_numbers"])
+def test_fail_predicate_agg_is_whole_stage_codegen(spark, case):
+    """Verdict counting stays in one codegen'd stage: array element rules
+    compile to lambda-free array functions (a higher-order function is
+    CodegenFallback and would take the partial aggregate out of
+    whole-stage codegen)."""
+    if case == "gateway":
+        df = gateway_requests(spark, n_rows=2_000)
+        doc = GATEWAY_SCHEMA
+    else:
+        df = spark.createDataFrame(
+            [([1, 2],), ([0, 11],), (None,), ([None, 3],)], "xs array<int>"
+        )
+        doc = {"properties": {"xs": {"items": {"type": "number", "enum": [1, 2, 3, 11]}}}}
+    pred = js.compile_schema(doc).fail_predicate(df)
+    assert "lambdafunction" not in (
+        df.select(pred.alias("p"))._jdf.queryExecution().analyzed().toString()
+    )
+    q = df.agg(F.sum(pred.cast("long")).alias("bad"))
+    assert q.collect()[0]["bad"] > 0
+    # the final adaptive plan exists only once the query has run
+    assert re.search(
+        r"\*\(\d+\) HashAggregate\(keys=\[\], functions=\[partial_sum", plan_of(q)
+    )
 
 
 def test_span_dedup_no_cartesian_and_single_hash_pass(spark):

@@ -7,6 +7,8 @@ columns and for JSON-string columns in both parse modes."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,6 +100,8 @@ def nested_df(spark):
 FORMER_FALLBACK_DOCS = {
     "script": {"script": ["if($.id > 1, return('big'))"]},
     "foreach": {"foreach": {"items": {"lte": {"__val.q": 100}}}},
+    "foreach_index": {"foreach": {"items": {"lt": {"__key": 1}}}},
+    "foreach_map": {"foreach": {"m": {"neq": {"__key": "z"}}}},
     "ref": {
         "$defs": {"short": {"maxLength": 3}},
         "properties": {"s": {"$ref": "#/$defs/short"}},
@@ -118,8 +122,115 @@ FORMER_FALLBACK_DOCS = {
 
 
 def test_predicate_equals_arrays_former_fallback_docs(spark, nested_df):
+    # a NULL element and an empty array next to valid values
+    df = nested_df.unionByName(
+        spark.createDataFrame(
+            [(5, "y", [None, {"q": 3}], {"k": "v"}), (6, "z", [], {"k": "v"})],
+            nested_df.schema,
+        )
+    )
     for name, doc in FORMER_FALLBACK_DOCS.items():
-        assert _every_path(js.compile_schema(doc), nested_df) > 0, name
+        assert _every_path(js.compile_schema(doc), df) > 0, name
+
+
+def _analyzed(df, pred) -> str:
+    return df.select(pred.alias("p"))._jdf.queryExecution().analyzed().toString()
+
+
+def _has_lambda(df, pred) -> bool:
+    return "lambdafunction" in _analyzed(df, pred)
+
+
+@pytest.fixture()
+def arrays_df(spark):
+    nan = float("nan")
+    return spark.createDataFrame(
+        [
+            (1, ["ball", "game"], [1, 2], [0.5, 1.0], [True], [Decimal("1.00")], {"k": "v"}),
+            (2, None, None, None, None, None, None),
+            (3, [], [], [], [], [], {}),
+            (4, [None, "ball"], [None, 1], [None, 1.0], [None], [None], {"k": "v", "z": "w"}),
+            (5, ["", "ball", "ball"], [1, 1, 3], [nan], [False, False],
+             [Decimal("5.50"), Decimal("1.00")], {"z": "w"}),
+            (6, ["knitting"], [0, -1], [1.5, nan, -0.0], [True, False],
+             [Decimal("99.99")], {"k": None}),
+            (7, [None], [None], [None], [None], [None], {}),
+            (8, ["game"], [2], [0.0, 1.0], [True], [Decimal("0.50")], {"k": "v"}),
+        ],
+        "id int, s array<string>, n array<int>, d array<double>, b array<boolean>,"
+        " dec array<decimal(10,2)>, m map<string,string>",
+    )
+
+
+def _items(col, **rule):
+    return {"properties": {col: {"items": rule}}}
+
+
+# element rules FAILS compiles without a lambda (Rule.any_kernel)
+KERNEL_DOCS = {
+    "type_enum_str": _items("s", type="string", enum=["ball", "game", "music"]),
+    "enum_str_with_empty": _items("s", enum=["ball", ""]),
+    "type_mismatch_str": _items("s", type="number"),
+    "enum_int_misfit_values": _items("n", enum=[1.5, "1"]),
+    "enum_double_nan": _items("d", enum=[0.5, 1, 2]),
+    "bool": _items("b", type="boolean", enum=[True]),
+    "bool_coerced_enum": _items("b", enum=["false", 0]),
+    "decimal": _items("dec", type="number", enum=[1, 5.5, 99.99]),
+}
+
+# element rules that keep the shared exists
+LAMBDA_DOCS = {
+    "max_min_double": _items("d", maximum=1.5, minimum=0),
+    "exclusive_bool_double": _items(
+        "d", maximum=1.5, exclusiveMaximum=True, minimum=0, exclusiveMinimum=True
+    ),
+    "exclusive_numeric_int": _items("n", exclusiveMaximum=3, exclusiveMinimum=0),
+    "decimal_bounds": _items("dec", maximum=50, minimum=1),
+    "map_declared": {
+        "properties": {"m": {"properties": {"k": {}}, "additionalProperties": False}},
+    },
+    "map_none_declared": {
+        "properties": {"m": {"properties": {}, "additionalProperties": False}},
+    },
+}
+
+
+def test_predicate_element_rules_equal_arrays(spark, arrays_df):
+    """Every element rule agrees with the violations array row by row —
+    NULL/empty arrays, NULL, "" and duplicate elements, enum values the
+    element type cannot hold, NaN, bool and decimal elements — and the
+    kernels really leave the predicate lambda-free."""
+    df = arrays_df.cache()
+    for name, doc in {**KERNEL_DOCS, **LAMBDA_DOCS}.items():
+        plan = js.compile_schema(doc)
+        assert _has_lambda(df, plan.fail_predicate(df)) == (name in LAMBDA_DOCS), name
+        assert 0 < _every_path(plan, df) < df.count(), name
+    df.unpersist()
+
+
+def test_predicate_mixed_element_rules_share_one_lambda(spark, arrays_df):
+    """Rules without a kernel (multipleOf, bounds, integer on doubles)
+    keep ONE exists next to the kernels, and the result still agrees."""
+    # no NaN rows for `integer`: its message casts the value to long,
+    # which ANSI mode rejects for NaN
+    finite = arrays_df.filter(~F.col("id").isin(5, 6))
+    for doc, df in (
+        (_items("n", enum=[0, 1, 2, 3], minimum=0, multipleOf=2, maximum=2), arrays_df),
+        (_items("d", type="integer", enum=[0, 0.5, 1]), finite),
+    ):
+        plan = js.compile_schema(doc)
+        assert _analyzed(df, plan.fail_predicate(df)).count("exists(") == 1, doc
+        assert _bad_rows(plan, df) > 0, doc
+
+
+def test_predicate_variant_array_keeps_lambda(spark, arrays_df):
+    """A variant array has no static element type: its element rules
+    keep the exists path, and agree with the violations array."""
+    plan = js.compile_schema(_items("d", type="number", enum=[0.5, 1, 2]))
+    doc = _as_json(arrays_df.select("d"))
+    pred = plan.fail_predicate(doc, json_col="payload", json_types="variant")
+    assert _has_lambda(doc, pred)
+    assert _bad_rows(plan, doc, json_col="payload", json_types="variant") > 0
 
 
 def test_schemacheck_counts_match_arrays(spark, nested_df):
