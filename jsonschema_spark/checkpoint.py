@@ -41,8 +41,17 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .operators.checks import Check, CheckSuite, _partition_id
+from .operators.checks import (
+    VERDICT_SCHEMA,
+    Check,
+    CheckSuite,
+    Drift,
+    _partition_id,
+    local_frame,
+)
+from .sources.tables import path_exists
 
 CHECKPOINT_SCHEMA = (
     "partition_id string, check string, completed_at timestamp, "
@@ -67,12 +76,16 @@ def _df_fingerprint(df: DataFrame) -> str:
     return f"{row['n']}:{row['h']}"
 
 
-def _lineage(source_id: str, check: Check) -> str:
+def _lineage(spark: SparkSession, source_id: str, check: Check) -> str:
     """Stable fingerprint of (input, check config): same lineage ⇒ the
     cached verdict is valid for this re-run.  DataFrame-valued config
     (e.g. ReferentialIntegrity.dim, Drift.baseline) contributes a
-    content fingerprint so a changed dim invalidates old manifest rows."""
+    content fingerprint so a changed dim invalidates old manifest rows;
+    a stored drift baseline contributes its quantiles, so a baseline
+    re-saved at the same path invalidates the old drift verdicts."""
     cfg = {}
+    if isinstance(check, Drift) and check.baseline_path is not None:
+        cfg["baseline_quantiles"] = check._base_quantiles(spark)
     for k, v in sorted(vars(check).items()):
         if isinstance(v, (str, int, float, bool, list, tuple, dict, type(None))):
             cfg[k] = v
@@ -94,20 +107,19 @@ class CheckpointManifest:
     path: str
 
     def read(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.parquet(self.path)
-        except Exception:
-            return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        """The manifest rows.  Only a MISSING manifest reads as empty: a
+        manifest that exists but cannot be read raises (when the rows
+        are collected) instead of re-running everything and appending a
+        second set of rows."""
+        if not path_exists(spark, self.path):
+            return local_frame(spark, [], CHECKPOINT_SCHEMA)
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def completed(self, spark: SparkSession, lineages: dict[str, str]) -> set[tuple[str, str]]:
         """(partition_id, check) pairs already recorded with a matching
         lineage.  Driver-small: one row per partition × check."""
         m = self.read(spark)
-        rows = (
-            m.select("partition_id", "check", "lineage")
-            .distinct()
-            .collect()
-        )
+        rows = m.select("partition_id", "check", "lineage").collect()
         return {
             (r["partition_id"], r["check"])
             for r in rows
@@ -126,7 +138,7 @@ class CheckpointManifest:
             )
             for v in verdicts
         ]
-        df = spark.createDataFrame(rows, CHECKPOINT_SCHEMA).withColumn(
+        df = local_frame(spark, rows, CHECKPOINT_SCHEMA).withColumn(
             "completed_at", F.timestamp_seconds(F.lit(now))
         )
         df.coalesce(1).write.mode("append").parquet(self.path)
@@ -212,16 +224,16 @@ def _partition_tuples_from_files(df: DataFrame, cols: Sequence[str]):
 def _enumerate_partitions(df: DataFrame, cols: Sequence[str]):
     """(collected rows of __pid + partition cols, route): the metadata
     route when the input is a bare hive-partitioned scan (zero
-    fact-table bytes), else one distinct scan.  pids always come from
+    fact-table bytes, and no Spark job: the parsed values are cast on a
+    local relation), else one distinct scan.  pids always come from
     the SAME Spark _partition_id expression the verdicts use — a
     driver-side '/'.join would diverge on booleans/NULLs."""
-    from pyspark.sql import types as T
-
     spark = df.sparkSession
     cols = list(cols)
     str_tuples = _partition_tuples_from_files(df, cols)
     if str_tuples is not None:
-        tiny = spark.createDataFrame(
+        tiny = local_frame(
+            spark,
             str_tuples,
             T.StructType([T.StructField(c, T.StringType(), True) for c in cols]),
         )
@@ -288,7 +300,9 @@ class ResumableRun:
         manifest; append new checkpoint rows; return the verdicts of
         THIS run (empty if everything was already done)."""
         spark = df.sparkSession
-        lineages = {c.name: _lineage(self.source_id, c) for c in self.suite.checks}
+        lineages = {
+            c.name: _lineage(spark, self.source_id, c) for c in self.suite.checks
+        }
         done = self.manifest.completed(spark, lineages)
         self.last_ran: dict[str, list[tuple]] = {}
 
@@ -304,8 +318,8 @@ class ResumableRun:
             # metadata route when available: enumerate partitions from
             # the file listing (no scan, no shuffle — a fully-
             # checkpointed resume touches ZERO fact-table bytes), with
-            # typed values + pids re-derived by one Spark job over
-            # n_partitions driver-local rows
+            # typed values + pids re-derived over n_partitions rows of a
+            # local relation (evaluated on the driver: no Spark job)
             raw, self.partition_source = _enumerate_partitions(
                 df, self.partition_by
             )
@@ -348,10 +362,8 @@ class ResumableRun:
         if new_rows:
             self.manifest.append(spark, new_rows, lineages)
         if all_new is None:
-            from .operators.checks import VERDICT_SCHEMA
-
-            return spark.createDataFrame([], VERDICT_SCHEMA)
-        return spark.createDataFrame(new_rows, all_new.schema)
+            return local_frame(spark, [], VERDICT_SCHEMA)
+        return local_frame(spark, new_rows, all_new.schema)
 
 @dataclass
 class SideOutput:

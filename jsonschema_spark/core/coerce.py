@@ -25,6 +25,16 @@ def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, T.NumericType)
 
 
+def double_string(d: Column) -> Column:
+    """A number as StringOf prints it: integral values without ".0".
+    try_cast: NaN, ±Infinity and |x| >= 2^63 fit no long and print
+    through cast(string), where ANSI mode would fail the query."""
+    as_long = d.try_cast("long")
+    return F.when(d == as_long.cast("double"), as_long.cast("string")).otherwise(
+        d.cast("string")
+    )
+
+
 def string_of(col: Column, dtype: T.DataType | None) -> Column:
     """StringOf (common.go:71-91): bool -> "true"/"false",
     float -> shortest fixed form (FormatFloat 'f' -1), nil -> ""."""
@@ -39,14 +49,7 @@ def string_of(col: Column, dtype: T.DataType | None) -> Column:
     if _is_integral(dtype):
         return F.coalesce(col.cast("string"), F.lit(""))
     if _is_numeric(dtype):
-        # shortest form: integral doubles print without ".0"
-        as_long = col.cast("long")
-        return F.coalesce(
-            F.when(col == as_long.cast("double"), as_long.cast("string")).otherwise(
-                col.cast("string")
-            ),
-            F.lit(""),
-        )
+        return F.coalesce(double_string(col), F.lit(""))
     if isinstance(dtype, (T.TimestampType, T.DateType)):
         return F.coalesce(col.cast("string"), F.lit(""))
     if isinstance(dtype, T.BinaryType):

@@ -360,21 +360,17 @@ class ValueRef:
 
     def str_of(self) -> Column:
         """StringOf coercion (common.go:71-91) over this ref."""
-        from .coerce import string_of
+        from .coerce import double_string, string_of
         from .variant import KIND_BOOL, KIND_NUMBER, KIND_STRING
 
         if not self._hoistable():
             return string_of(self.col, self.dtype)
         k, s, d, b = self.v_kind(), self.v_string(), self.v_double(), self.v_bool()
-        as_long = d.cast("long")
-        num_s = F.when(d == as_long.cast("double"), as_long.cast("string")).otherwise(
-            d.cast("string")
-        )
         return (
             F.when(self.col.isNull() | F.is_variant_null(self.col), F.lit(""))
             .when(k == KIND_STRING, s)
             .when(k == KIND_BOOL, F.when(b, "true").otherwise("false"))
-            .when(k == KIND_NUMBER, num_s)
+            .when(k == KIND_NUMBER, double_string(d))
             .otherwise(F.coalesce(F.to_json(self.col), F.lit("")))
         )
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .coerce import double_string
+
 KIND_STRING = "string"
 KIND_NUMBER = "number"
 KIND_BOOL = "bool"
@@ -135,15 +137,11 @@ def variant_string_of(col: Column) -> Column:
     bool -> "true"/"false", number -> shortest fixed form, null -> ""."""
     k = variant_kind(col)
     d = F.try_variant_get(col, "$", "double")
-    as_long = d.cast("long")
-    num_s = F.when(d == as_long.cast("double"), as_long.cast("string")).otherwise(
-        d.cast("string")
-    )
     return (
         F.when(col.isNull() | F.is_variant_null(col), F.lit(""))
         .when(k == KIND_STRING, F.try_variant_get(col, "$", "string"))
         .when(k == KIND_BOOL, F.when(F.try_variant_get(col, "$", "boolean"), "true").otherwise("false"))
-        .when(k == KIND_NUMBER, num_s)
+        .when(k == KIND_NUMBER, double_string(d))
         .otherwise(F.coalesce(F.to_json(col), F.lit("")))
     )
 

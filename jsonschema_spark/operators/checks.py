@@ -42,16 +42,52 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import bisect
 from dataclasses import dataclass, field
-from typing import Sequence
+from typing import Iterable, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 VERDICT_SCHEMA = (
     "partition_id string, check string, pass boolean, "
     "violation_count long, metrics map<string,string>"
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: T.StructType | str
+) -> DataFrame:
+    """Driver-held rows (tuples or ``Row``s by position, dicts by field
+    name) as a DataFrame planned as a JVM ``LocalRelation``: the rows
+    cross to the JVM once as an Arrow table, so reading the frame needs
+    no Python worker and collecting it runs no Spark job.
+    ``createDataFrame`` of a Python list makes a pickled Python RDD
+    instead.  Timestamps must be timezone-aware (Arrow reads a naive
+    one as UTC) or NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    names = schema.names
+    vals = [[r.get(n) for n in names] if isinstance(r, dict) else r for r in rows]
+    cols = list(zip(*vals, strict=True)) if vals else [()] * len(names)
+    if len(cols) != len(names):
+        raise ValueError(f"rows have {len(cols)} fields, schema has {len(names)}")
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _doubles(xs: Sequence[float]) -> Column:
+    """array<double> literal: ONE literal node (one py4j call), where
+    ``F.lit(list)`` builds one child per element."""
+    return F.lit(np.array(xs, dtype=np.float64))
 
 
 def _partition_id(partition_by: Sequence[str] | None) -> Column:
@@ -440,8 +476,9 @@ class Drift(Check):
 
     Sketch: ``percentile_approx`` (Spark's GK/KLL-like quantile sketch,
     mergeable map-side → one tiny shuffle) produces an n-quantile
-    summary of both current and baseline; from the two summaries the
-    driver computes
+    summary of both current and baseline; one Column compares the two
+    summaries (``_verdict_parts``, shared by the standalone and the fused
+    path):
       * PSI  (population stability index over equal-population baseline
               bins; >0.2 conventionally = drifted), and
       * KS   (max CDF gap estimated on the merged quantile grid).
@@ -463,59 +500,20 @@ class Drift(Check):
     partition_by: Sequence[str] | None = None
     name: str = "drift"
 
-    def _quantiles(self, df: DataFrame, pid: bool) -> DataFrame:
+    def _quantile_agg(self) -> Column:
         qs = [i / self.n_quantiles for i in range(self.n_quantiles + 1)]
         col = F.col(self.column).cast("double")
         if self.approx:
-            q = F.percentile_approx(col, qs, self.accuracy)
-        else:
-            q = F.percentile(col, F.array(*[F.lit(x) for x in qs]))
+            return F.percentile_approx(col, qs, self.accuracy)
+        return F.percentile(col, F.array(*[F.lit(x) for x in qs]))
+
+    def _quantiles(self, df: DataFrame, pid: bool) -> DataFrame:
         group = (
             df.groupBy(_partition_id(self.partition_by).alias("partition_id"))
             if pid
             else df.groupBy(F.lit("ALL").alias("partition_id"))
         )
-        return group.agg(q.alias("quantiles"))
-
-    @staticmethod
-    def psi_ks(base_q: list[float], cur_q: list[float]) -> tuple[float, float]:
-        """Driver-side arithmetic on two quantile summaries (tiny).
-
-        STEP CDFs, not interpolation: discrete/skewed columns produce
-        REPEATED quantile knots (e.g. turn_idx's grid is [0,0,1,1,...])
-        and a piecewise-linear CDF through duplicated knots is
-        ill-defined — it reported drift for a distribution against
-        itself.  bisect_right/len is exact for the summary's point
-        masses and treats both sides identically."""
-        import bisect
-        import math
-
-        if len(base_q) < 2 or len(cur_q) < 2:
-            return 0.0, 0.0
-
-        def cdf(q: list[float], x: float) -> float:
-            return bisect.bisect_right(q, x) / len(q)
-
-        # PSI over the deduped baseline grid: expected mass from the
-        # baseline's own CDF (uniform only when knots are distinct)
-        eps = 1e-6
-        grid = sorted(set(base_q))
-        psi = 0.0
-        prev_b = prev_c = 0.0
-        for g in grid:
-            b, c = cdf(base_q, g), cdf(cur_q, g)
-            expected = max(b - prev_b, eps)
-            actual = max(c - prev_c, eps)
-            psi += (actual - expected) * math.log(actual / expected)
-            prev_b, prev_c = b, c
-        # tail mass above the last baseline knot
-        expected = max(1.0 - prev_b, eps)
-        actual = max(1.0 - prev_c, eps)
-        psi += (actual - expected) * math.log(actual / expected)
-        # KS on the merged grid
-        merged = sorted(set(base_q) | set(cur_q))
-        ks = max(abs(cdf(base_q, x) - cdf(cur_q, x)) for x in merged)
-        return psi, ks
+        return group.agg(self._quantile_agg().alias("quantiles"))
 
     def save_baseline(self, df: DataFrame, path: str) -> None:
         """Persist this run's quantile summary as the next run's
@@ -524,114 +522,103 @@ class Drift(Check):
         self._quantiles(df, pid=False).write.mode("overwrite").parquet(path)
 
     def verdicts(self, df: DataFrame) -> DataFrame:
-        spark = df.sparkSession
-        base_q = self._base_quantiles(spark)
-        cur = self._quantiles(df, pid=True).collect()
-        rows = []
-        for r in cur:
-            cur_q = list(r["quantiles"] or [])
-            if not base_q or not cur_q:
-                psi, ks = 0.0, 0.0
-            else:
-                psi, ks = self.psi_ks(base_q, cur_q)
-            drifted = psi > self.psi_threshold or ks > self.ks_threshold
-            rows.append(
-                (
-                    r["partition_id"],
-                    self.name,
-                    not drifted,
-                    int(drifted),
-                    {
-                        "psi": f"{psi:.6f}",
-                        "ks": f"{ks:.6f}",
-                        "column": self.column,
-                        "n_quantiles": str(self.n_quantiles),
-                    },
-                )
-            )
-        return spark.createDataFrame(rows, VERDICT_SCHEMA)
+        base_q = self._base_quantiles(df.sparkSession)
+        fail, metrics = self._verdict_parts(F.col("quantiles"), base_q)
+        return self._quantiles(df, pid=True).select(
+            *_verdict_select(self.name, fail, metrics)
+        )
 
     def _base_quantiles(self, spark) -> list[float]:
         if self.baseline_path is not None:
-            base = spark.read.parquet(self.baseline_path).collect()
+            # the schema save_baseline writes: no schema-inference job
+            base = (
+                spark.read.schema("quantiles array<double>")
+                .parquet(self.baseline_path)
+                .collect()
+            )
         elif self.baseline is not None:
             base = self._quantiles(self.baseline, pid=False).collect()
         else:
             raise ValueError("Drift needs a baseline DataFrame or baseline_path")
-        return list(base[0]["quantiles"]) if base else []
+        return list(base[0]["quantiles"] or []) if base else []
 
     def fused_aggs(self, df: DataFrame, prefix: str | None = None):
         """Join the shared single-scan aggregation: the quantile sketch
-        is one agg expression; PSI/KS compile COLUMNAR against the
-        baseline summary embedded as literals (the baseline is one tiny
-        collected row — same bound as verdicts()).  Same step-CDF
-        arithmetic as psi_ks: cdf(q, x) = |{e in q : e <= x}| / |q|."""
-        import bisect
-
+        is one agg expression, and the verdict is the same Column the
+        standalone ``verdicts`` applies to its own summary."""
         p = prefix or f"__{self.name}__"
         base_q = self._base_quantiles(df.sparkSession)
-        qs = [i / self.n_quantiles for i in range(self.n_quantiles + 1)]
-        col = F.col(self.column).cast("double")
-        if self.approx:
-            agg = F.percentile_approx(col, qs, self.accuracy)
-        else:
-            agg = F.percentile(col, F.array(*[F.lit(x) for x in qs]))
 
         def build() -> Column:
-            cur = F.col(f"{p}quantiles")
+            fail, metrics = self._verdict_parts(F.col(f"{p}quantiles"), base_q)
+            return _verdict_struct(self.name, fail, metrics)
+
+        return [self._quantile_agg().alias(f"{p}quantiles")], build
+
+    def _verdict_parts(self, cur: Column, base_q: list[float]) -> tuple[Column, Column]:
+        """(drifted 0/1, metrics) of the quantile summary ``cur``
+        against the baseline knots, as one Column whose size does not
+        grow with the grid: the baseline enters as literal arrays and
+        every per-knot term is a higher-order function over them.
+
+        STEP CDFs, not interpolation: discrete/skewed columns produce
+        REPEATED quantile knots (e.g. turn_idx's grid is [0,0,1,1,...])
+        and a piecewise-linear CDF through duplicated knots is
+        ill-defined — it reported drift for a distribution against
+        itself.  cdf(q, x) = |{e in q : e <= x}| / |q| is exact for the
+        summary's point masses and treats both sides identically.
+
+          * PSI over the deduped baseline grid, expected mass from the
+            baseline's own CDF (uniform only when knots are distinct),
+            plus the tail mass above the last knot; both masses are
+            floored at 1e-6 and the terms summed left to right.
+          * KS as the max CDF gap over the merged grid = the baseline
+            knots and the current knots.
+
+        A summary with fewer than 2 knots on either side reads as no
+        drift (psi = ks = 0)."""
+        if len(base_q) < 2:
+            psi, ks = F.lit(0.0), F.lit(0.0)
+        else:
+            base_q = sorted(base_q)
+            nb, eps = len(base_q), 1e-6
+            grid = sorted(set(base_q))
+            b = [bisect.bisect_right(base_q, g) / nb for g in grid]
+            expected = [max(x - prev, eps) for x, prev in zip(b, [0.0, *b[:-1]])]
+            tail_expected = max(1.0 - b[-1], eps)
             n_cur = F.size(cur).cast("double")
 
-            def cdf_cur(x: Column) -> Column:
-                return F.size(F.filter(cur, lambda e: e <= x)) / n_cur
+            def cdf(q: Column, n: Column, x: Column) -> Column:
+                return F.size(F.filter(q, lambda e: e <= x)) / n
 
-            eps = 1e-6
-            if len(base_q) >= 2:
-                grid = sorted(set(base_q))
-                psi = F.lit(0.0)
-                prev_b, prev_c = 0.0, F.lit(0.0)
-                for g in grid:
-                    b = bisect.bisect_right(base_q, g) / len(base_q)
-                    c = cdf_cur(F.lit(float(g)))
-                    expected = max(b - prev_b, eps)
-                    actual = F.greatest(c - prev_c, F.lit(eps))
-                    psi = psi + (actual - expected) * F.log(actual / F.lit(expected))
-                    prev_b, prev_c = b, c
-                expected = max(1.0 - prev_b, eps)
-                actual = F.greatest(F.lit(1.0) - prev_c, F.lit(eps))
-                psi = psi + (actual - expected) * F.log(actual / F.lit(expected))
-                # KS over the merged grid = max over base knots + cur knots
-                base_lit = F.array(*[F.lit(float(x)) for x in sorted(base_q)])
-                nb = float(len(base_q))
-
-                def cdf_base(x: Column) -> Column:
-                    return F.size(F.filter(base_lit, lambda e: e <= x)) / F.lit(nb)
-
-                ks_base = [
-                    F.abs(
-                        F.lit(bisect.bisect_right(base_q, g) / len(base_q))
-                        - cdf_cur(F.lit(float(g)))
-                    )
-                    for g in grid
-                ]
-                ks_cur = F.array_max(
-                    F.transform(cur, lambda e: F.abs(cdf_base(e) - cdf_cur(e)))
-                )
-                ks = F.greatest(*ks_base, ks_cur)
-                valid = cur.isNotNull() & (F.size(cur) >= 2)
-                psi = F.when(valid, psi).otherwise(F.lit(0.0))
-                ks = F.when(valid, ks).otherwise(F.lit(0.0))
-            else:
-                psi, ks = F.lit(0.0), F.lit(0.0)
-            drifted = (psi > self.psi_threshold) | (ks > self.ks_threshold)
-            metrics = F.create_map(
-                F.lit("psi"), F.format_string("%.6f", psi),
-                F.lit("ks"), F.format_string("%.6f", ks),
-                F.lit("column"), F.lit(self.column),
-                F.lit("n_quantiles"), F.lit(str(self.n_quantiles)),
+            c = F.transform(_doubles(grid), lambda g: cdf(cur, n_cur, g))
+            prev_c = F.concat(F.array(F.lit(0.0)), F.slice(c, 1, len(grid) - 1))
+            actual = F.zip_with(c, prev_c, lambda x, y: F.greatest(x - y, F.lit(eps)))
+            terms = F.zip_with(
+                actual, _doubles(expected), lambda a, e: (a - e) * F.log(a / e)
             )
-            return _verdict_struct(self.name, drifted.cast("int"), metrics)
-
-        return [agg.alias(f"{p}quantiles")], build
+            tail = F.greatest(F.lit(1.0) - F.element_at(c, -1), F.lit(eps))
+            psi = F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t) + (
+                tail - tail_expected
+            ) * F.log(tail / F.lit(tail_expected))
+            base, n_base = _doubles(base_q), F.lit(float(nb))
+            ks = F.greatest(
+                F.array_max(F.zip_with(_doubles(b), c, lambda x, y: F.abs(x - y))),
+                F.array_max(F.transform(
+                    cur, lambda e: F.abs(cdf(base, n_base, e) - cdf(cur, n_cur, e))
+                )),
+            )
+            valid = cur.isNotNull() & (F.size(cur) >= 2)
+            psi = F.when(valid, psi).otherwise(F.lit(0.0))
+            ks = F.when(valid, ks).otherwise(F.lit(0.0))
+        drifted = (psi > self.psi_threshold) | (ks > self.ks_threshold)
+        metrics = F.create_map(
+            F.lit("psi"), F.format_string("%.6f", psi),
+            F.lit("ks"), F.format_string("%.6f", ks),
+            F.lit("column"), F.lit(self.column),
+            F.lit("n_quantiles"), F.lit(str(self.n_quantiles)),
+        )
+        return drifted.cast("int"), metrics
 
 
 @dataclass

@@ -209,14 +209,17 @@ def write_output(
 
 def sink_exists(spark, sink: str) -> bool:
     """Whether a write_output sink already holds data: catalog lookup
-    for iceberg: sinks, Hadoop-FS existence for paths (works for
-    file:/hdfs:/s3a: alike — os.path would only see local paths)."""
+    for iceberg: sinks, Hadoop-FS existence (path_exists) for paths."""
     if sink.startswith("iceberg:"):
         return spark.catalog.tableExists(sink[len("iceberg:"):])
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(sink)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
+    return path_exists(spark, sink)
+
+
+def path_exists(spark, path: str) -> bool:
+    """Hadoop-FS existence of a path (works for file:/hdfs:/s3a:
+    alike — os.path would only see local paths)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
 
 
 def write_bucketed(

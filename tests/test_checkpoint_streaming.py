@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
@@ -322,6 +323,59 @@ def test_resumable_fresh_run_uses_fused_suite_with_drift(spark, part_df, tmp_pat
     # full resume: nothing re-runs
     assert run.run(part_df).collect() == []
     assert manifest.read(spark).count() == 6
+
+
+def _uniqueness_run(manifest):
+    suite = checks.CheckSuite(
+        [checks.Uniqueness(keys=["conv_id", "turn_idx"], partition_by=["day"])]
+    )
+    return ResumableRun(suite=suite, manifest=manifest,
+                        partition_by=["day"], source_id="t")
+
+
+def test_unreadable_manifest_raises(spark, part_df, tmp_path):
+    """Only a MISSING manifest reads as empty: a truncated part file
+    must fail the run, not re-run everything and append a second set
+    of rows on top of the unreadable ones."""
+    path = tmp_path / "corrupt_m"
+    run = _uniqueness_run(CheckpointManifest(str(path)))
+    assert len(run.run(part_df).collect()) == 2  # missing manifest: fresh
+    (part,) = path.glob("part-*.parquet")
+    part.write_bytes(part.read_bytes()[:20])
+    for crc in path.glob(".*.crc"):
+        crc.unlink()
+    with pytest.raises(Py4JJavaError):
+        run.run(part_df)
+    assert [p.name for p in path.glob("part-*.parquet")] == [part.name]
+    assert part.stat().st_size == 20
+
+
+def test_missing_manifest_directory_is_a_fresh_run(spark, part_df, tmp_path):
+    manifest = CheckpointManifest(str(tmp_path / "not" / "there"))
+    assert manifest.read(spark).collect() == []
+    assert len(_uniqueness_run(manifest).run(part_df).collect()) == 2
+
+
+def test_resave_stored_baseline_reruns_drift(spark, part_df, tmp_path):
+    """A stored drift baseline re-saved at the SAME path (the CLI's
+    save_baseline_to loop) must invalidate the old drift verdicts: the
+    lineage carries the stored quantiles, not only the path."""
+    qpath = str(tmp_path / "drift_q")
+    checks.Drift(column="turn_idx").save_baseline(part_df, qpath)
+    suite = checks.CheckSuite([
+        checks.Uniqueness(keys=["conv_id", "turn_idx"], partition_by=["day"]),
+        checks.Drift(column="turn_idx", baseline_path=qpath, partition_by=["day"]),
+    ])
+    run = ResumableRun(suite=suite, manifest=CheckpointManifest(str(tmp_path / "m")),
+                       partition_by=["day"], source_id="t")
+    assert len(run.run(part_df).collect()) == 4
+    assert run.run(part_df).collect() == []
+    shifted = part_df.withColumn("turn_idx", F.col("turn_idx") + 100)
+    checks.Drift(column="turn_idx").save_baseline(shifted, qpath)
+    rerun = run.run(part_df).collect()
+    assert {(r["check"], r["pass"]) for r in rerun} == {("drift", False)}
+    assert len(rerun) == 2
+    assert run.run(part_df).collect() == []
 
 
 def test_resume_partition_listing_is_metadata_only(spark, tmp_path):

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import jsonschema_spark as js
+from jsonschema_spark.checkpoint import CHECKPOINT_SCHEMA
 from jsonschema_spark.operators import checks
 from jsonschema_spark.sources.fixtures import dim_roles, dim_tools, transcripts
 
@@ -198,28 +202,186 @@ def test_check_suite_fused_equals_sequential(spark):
     assert p_fus == p_seq - per_consumer
 
 
-def test_drift_fused_matches_driver_path(spark):
-    """Drift's fused builder compiles PSI/KS columnar against literal
-    baseline knots; it must reproduce psi_ks (driver bisect arithmetic)
-    to the printed precision in both the no-drift and drift cases."""
-    import jsonschema_spark as js
-    from jsonschema_spark.sources.fixtures import transcripts
+def _psi_ks_oracle(base_q: list[float], cur_q: list[float]) -> tuple[float, float]:
+    """PSI/KS of two quantile summaries in plain Python (bisect step
+    CDFs) — the oracle for Drift's columnar verdict."""
+    import bisect
+    import math
 
+    if len(base_q) < 2 or len(cur_q) < 2:
+        return 0.0, 0.0
+    base_q = sorted(base_q)
+
+    def cdf(q: list[float], x: float) -> float:
+        return bisect.bisect_right(q, x) / len(q)
+
+    eps = 1e-6
+    psi = 0.0
+    prev_b = prev_c = 0.0
+    for g in sorted(set(base_q)):
+        b, c = cdf(base_q, g), cdf(cur_q, g)
+        expected = max(b - prev_b, eps)
+        actual = max(c - prev_c, eps)
+        psi += (actual - expected) * math.log(actual / expected)
+        prev_b, prev_c = b, c
+    expected = max(1.0 - prev_b, eps)
+    actual = max(1.0 - prev_c, eps)
+    psi += (actual - expected) * math.log(actual / expected)
+    merged = sorted(set(base_q) | set(cur_q))
+    ks = max(abs(cdf(base_q, x) - cdf(cur_q, x)) for x in merged)
+    return psi, ks
+
+
+def _drift_rows(df):
+    return {
+        r["partition_id"]: (r["pass"], r["violation_count"], dict(r["metrics"]))
+        for r in df.collect()
+        if r["check"] == "drift"
+    }
+
+
+def _assert_drift_agrees(chk, cur):
+    """Fused (inside a CheckSuite's shared aggregate), standalone and
+    the Python oracle give the same verdict for every partition."""
+    plan = js.compile_schema({"required": ["p"]})
+    suite = checks.CheckSuite([
+        checks.SchemaCheck(plan=plan, partition_by=chk.partition_by, name="schema"),
+        chk,
+    ])
+    fused = _drift_rows(suite.run(cur, fused=True))
+    alone = _drift_rows(chk.verdicts(cur))
+    assert fused == alone
+    base_q = chk._base_quantiles(cur.sparkSession)
+    summaries = chk._quantiles(cur, pid=True).collect()
+    assert len(summaries) == len(alone)
+    for r in summaries:
+        psi, ks = _psi_ks_oracle(base_q, list(r["quantiles"] or []))
+        ok, n_bad, m = alone[r["partition_id"]]
+        assert abs(float(m["psi"]) - psi) <= 1e-6, (r["partition_id"], m, psi)
+        assert abs(float(m["ks"]) - ks) <= 1e-6, (r["partition_id"], m, ks)
+        drifted = psi > chk.psi_threshold or ks > chk.ks_threshold
+        assert (ok, n_bad) == (not drifted, int(drifted)), r["partition_id"]
+    return alone
+
+
+def test_drift_fused_matches_driver_path(spark):
+    """Drift's verdict is one Column, applied to the fused suite's
+    shared aggregate and to the standalone summary alike; both agree
+    with the Python oracle in the no-drift and drift cases."""
     df = transcripts(spark, n_convs=300)
     shifted = df.selectExpr(
-        "conv_id", "turn_idx + 40 as turn_idx", "role", "text", "tool", "ts"
+        "conv_id as p", "turn_idx + 40 as turn_idx"
     )
-    plan = js.compile_schema({"required": ["conv_id"]})
-    for cur, want_drift in ((df, False), (shifted, True)):
-        suite = checks.CheckSuite([
-            checks.SchemaCheck(plan=plan, name="schema"),
-            checks.Drift(column="turn_idx", baseline=df, approx=False),
-        ])
-        seq = [r for r in suite.run(cur, fused=False).collect() if r["check"] == "drift"][0]
-        fus = [r for r in suite.run(cur, fused=True).collect() if r["check"] == "drift"][0]
-        assert fus["pass"] == seq["pass"] == (not want_drift)
-        assert fus["metrics"]["psi"] == seq["metrics"]["psi"]
-        assert fus["metrics"]["ks"] == seq["metrics"]["ks"]
+    for cur, want_drift in ((df.withColumnRenamed("conv_id", "p"), False),
+                            (shifted, True)):
+        chk = checks.Drift(column="turn_idx", baseline=df, approx=False)
+        (v,) = _assert_drift_agrees(chk, cur).values()
+        assert v[0] is (not want_drift)
+
+
+def test_drift_edge_summaries_agree(spark, tmp_path):
+    """Partitions whose summaries are degenerate: a baseline with one
+    distinct knot, a baseline with fewer than 2 knots, an all-NULL
+    current partition, shifted and unshifted partitions."""
+    cur = spark.createDataFrame(
+        [("same", float(i % 10)) for i in range(200)]
+        + [("shift", float(i % 10 + 6)) for i in range(200)]
+        + [("const", 5.0)] * 50
+        + [("nulls", None)] * 20,
+        "p string, v double",
+    )
+    base = spark.range(0, 1000).select((F.col("id") % 10).cast("double").alias("v"))
+    for approx in (False, True):
+        chk = checks.Drift(column="v", baseline=base, partition_by=["p"],
+                           approx=approx, n_quantiles=10)
+        got = _assert_drift_agrees(chk, cur)
+        assert got["p=shift"][0] is False
+        assert got["p=nulls"][2]["psi"] == "0.000000"
+    # approx summaries only (the last pass): exact percentiles
+    # interpolate knots whose last bits differ between 200 and 1000
+    # rows, and "same" reads as drifted there
+    assert got["p=same"][0] is True
+    one_knot = checks.Drift(
+        column="v", partition_by=["p"],
+        baseline=spark.createDataFrame([(5.0,)] * 30, "v double"),
+    )
+    got = _assert_drift_agrees(one_knot, cur)
+    assert got["p=const"][0] is True and got["p=shift"][0] is False
+    path = str(tmp_path / "short_baseline")
+    spark.createDataFrame(
+        [("ALL", [5.0])], "partition_id string, quantiles array<double>"
+    ).write.parquet(path)
+    short = checks.Drift(column="v", baseline_path=path, partition_by=["p"])
+    got = _assert_drift_agrees(short, cur)
+    assert {v[2]["psi"] for v in got.values()} == {"0.000000"}
+    assert all(v[0] for v in got.values())
+
+
+def test_drift_verdict_column_size_is_constant(spark):
+    """The verdict Column has the same shape at every grid size: the
+    baseline knots enter as literal arrays, not one expression each."""
+    base = spark.range(0, 2000).select((F.col("id") % 100).cast("double").alias("v"))
+
+    def lambdas(n: int) -> int:
+        chk = checks.Drift(column="v", baseline=base, n_quantiles=n)
+        plan = chk.verdicts(base)._jdf.queryExecution().analyzed().toString()
+        return plan.count("lambdafunction")
+
+    assert lambdas(10) == lambdas(50) > 0
+
+
+LOCAL_FRAME_CASES = {
+    "verdicts": (checks.VERDICT_SCHEMA, [
+        ("p=1", "drift", True, 0, {"psi": "0.0", "ks": "0.1"}),
+        Row(partition_id="p=2", check="schema", **{"pass": None},
+            violation_count=None, metrics={}),
+        {"partition_id": None, "check": "stats", "violation_count": 7},
+    ]),
+    "checkpoints": (CHECKPOINT_SCHEMA, [
+        ("p=1", "drift", datetime(2025, 1, 2, 3, 4, 5, tzinfo=timezone.utc),
+         "abc", {"k": None}),
+        {"partition_id": "p=2", "check": "schema", "metrics": {}},
+        ("p=3", None, None, None, None),
+    ]),
+    "partitions": ("day string, shard string", [
+        ("2025-01-01", "3"), (None, "__HIVE_DEFAULT_PARTITION__"), ("", None),
+    ]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LOCAL_FRAME_CASES))
+def test_local_frame_round_trips(spark, case):
+    """local_frame reads back what createDataFrame of the same Python
+    rows reads back: tuples, Rows and dicts, NULLs, empty maps, zero
+    rows."""
+    schema, rows = LOCAL_FRAME_CASES[case]
+    got = checks.local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert checks.local_frame(spark, [], schema).collect() == []
+    assert checks.local_frame(spark, [], schema).schema == want.schema
+
+
+def test_local_frame_is_a_local_relation_and_runs_no_job(spark):
+    """The frame is a JVM LocalRelation: collecting it (and a
+    projection over it) starts no Spark job, where a frame of the same
+    Python list made by createDataFrame does."""
+    rows = LOCAL_FRAME_CASES["verdicts"][1]
+    df = checks.local_frame(spark, rows, checks.VERDICT_SCHEMA)
+    assert df._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+    sc = spark.sparkContext
+
+    def jobs(frame, group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            frame.select("partition_id", F.size("metrics")).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(df, "local_frame") == 0
+    assert jobs(spark.createDataFrame(rows, checks.VERDICT_SCHEMA), "python_rdd") > 0
 
 
 def test_fused_suite_same_named_checks_do_not_collide(spark):

@@ -210,17 +210,67 @@ def test_predicate_element_rules_equal_arrays(spark, arrays_df):
 
 def test_predicate_mixed_element_rules_share_one_lambda(spark, arrays_df):
     """Rules without a kernel (multipleOf, bounds, integer on doubles)
-    keep ONE exists next to the kernels, and the result still agrees."""
-    # no NaN rows for `integer`: its message casts the value to long,
-    # which ANSI mode rejects for NaN
-    finite = arrays_df.filter(~F.col("id").isin(5, 6))
-    for doc, df in (
-        (_items("n", enum=[0, 1, 2, 3], minimum=0, multipleOf=2, maximum=2), arrays_df),
-        (_items("d", type="integer", enum=[0, 0.5, 1]), finite),
+    keep ONE exists next to the kernels, and the result still agrees —
+    NaN elements included."""
+    df = arrays_df
+    for doc in (
+        _items("n", enum=[0, 1, 2, 3], minimum=0, multipleOf=2, maximum=2),
+        _items("d", type="integer", enum=[0, 0.5, 1]),
     ):
         plan = js.compile_schema(doc)
         assert _analyzed(df, plan.fail_predicate(df)).count("exists(") == 1, doc
         assert _bad_rows(plan, df) > 0, doc
+
+
+def _infos(plan, df, json_col=None, json_types=None) -> str:
+    """Every violation message of ``df``, joined (after _bad_rows has
+    checked the predicate against them)."""
+    _bad_rows(plan, df, json_col=json_col, json_types=json_types)
+    if json_col is None:
+        ann = plan.annotate(df, col="__v")
+    else:
+        ann = plan.annotate_json(df, json_col, col="__v", json_types=json_types)
+    rows = ann.select(F.explode("__v").alias("v")).select("v.info").collect()
+    return " | ".join(r["info"] for r in rows)
+
+
+@pytest.mark.parametrize("rule", [{"type": "integer"}, {"multipleOf": 2}])
+def test_messages_print_doubles_no_long_holds(spark, rule):
+    """A message prints a double that no long holds (NaN, ±Infinity,
+    |x| >= 2^63) through cast(string): under ANSI mode a cast to long
+    would fail the whole violations query.  Fixed columns, then JSON
+    documents (NaN/Infinity are the JSON parser's non-numeric-number
+    extension) in both parse modes."""
+    plan = js.compile_schema({"properties": {"x": rule}})
+    nan, inf = float("nan"), float("inf")
+    df = spark.createDataFrame(
+        list(enumerate([nan, inf, -inf, 1e20, -1e20, 2.5, 4.0, None])),
+        "id int, x double",
+    )
+    tokens = ["NaN", "Infinity", "-Infinity", "1e20", "-1e20", "2.5", "4.0"]
+    docs = spark.createDataFrame(
+        [(f'{{"x": {t}}}',) for t in tokens], "payload string"
+    )
+    fixed = _infos(plan, df)
+    for shown in ("NaN", ":Infinity", "-Infinity", ":1.0E20", "-1.0E20"):
+        assert shown in fixed, (shown, fixed)
+    variant = _infos(plan, docs, json_col="payload", json_types="variant")
+    for shown in (":1.0E20", "-1.0E20"):
+        assert shown in variant, (shown, variant)
+    static = _infos(plan, docs, json_col="payload", json_types="static")
+    if "multipleOf" in rule:
+        for shown in ("NaN", ":Infinity", "-Infinity", ":1.0E20"):
+            assert shown in static, (shown, static)
+
+
+def test_variant_unique_items_tags_huge_numbers(spark):
+    """uniqueItems over a variant array tags each element by its
+    StringOf: a number no long holds must tag, not fail the query."""
+    plan = js.compile_schema({"properties": {"a": {"uniqueItems": True}}})
+    docs = spark.createDataFrame(
+        [('{"a": [1e20, 1e20]}',), ('{"a": [1e20, -1e20]}',)], "payload string"
+    )
+    assert _bad_rows(plan, docs, json_col="payload", json_types="variant") == 1
 
 
 def test_predicate_variant_array_keeps_lambda(spark, arrays_df):
